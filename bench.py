@@ -485,7 +485,7 @@ def main() -> None:
     # 6.6/2.1/1.6 s without). The warmup's sf0.001 cache entries are
     # plan-keyed and never match an SF_DIR build, so leaving them is
     # inert; cachemgr.release_session_caches() remains the tool for
-    # cold probes (tools/opt_probe.py --cold) and test teardown.
+    # cold measurements and test teardown.
 
     # Baseline-comparable wordcount FIRST, right after warmup: the
     # registry passes that follow persist shingle/TF caches and churn

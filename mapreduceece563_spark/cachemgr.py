@@ -1,119 +1,103 @@
-"""Session cache discipline (optimization guide §5: unpersist when done).
+"""The one shared-stage layer: every DataFrame cache and memo lives here.
 
-Spark's SQL cache registry (``CacheManager``) is PLAN-KEYED and
-append-only until an explicit ``unpersist``: ``df.cache()`` registers
-the frame's canonicalized plan, and any later query — same entry next
-pass, or a different entry building the identical subtree — gets the
-materialized data substituted by ``lookupCachedData``. Two
-consequences, measured in r13/r14:
+Spark's SQL cache registry (``CacheManager``) is PLAN-KEYED: ``df.cache()``
+registers the frame's canonicalized plan, and any later query — the
+same entry next pass, or a different entry building the identical
+subtree — gets the materialized data substituted by
+``lookupCachedData``. The registry grows per DISTINCT PLAN, not per
+call, so it is the accounting; nothing here keeps a second list.
 
-- The per-call ``stage(df)`` caches below act as a session-scoped,
-  plan-keyed SHARED-STAGE layer: pass 2 of the bench re-caches the
-  identical plan and hits pass 1's entry (so min-of-N reflects
-  steady-state reuse), and entries sharing a subtree (triangle wedges,
-  dedup_minhash bands) share one materialization. The registry grows
-  per DISTINCT PLAN, not per call — bounded by the number of stage()
-  sites per (sf_dir, conf) combination. An r14 experiment that swept
-  each entry's stages at the next entry's build regressed the
-  steady-state registry total 241 -> 276 s by forcing every pass to
-  rebuild every staged frame; the reuse is the point, so stages now
-  live until an explicit release.
-- Entries accumulated across UNRELATED phases are a real tax: the
-  bench's sf0.001 warmup left ~350 stale plans + their broadcast/RDD
-  references in the session, and the r13 bench showed 5-20 s pass-1
-  spikes on innocent entries plus a uniform drift on every build
-  (lookupCachedData is a linear scan with canonicalized-plan
-  comparisons). Releasing everything right after warmup cured all of
-  it (r14: phrase_search pass-1 13.7 -> 1.5 s, wordcount-13MB
-  0.705 -> 0.29 s, drain 19.0 -> 13.7 s).
+Two rules, and no DataFrame cache or module-level DataFrame dict
+anywhere else in the package:
 
-So the discipline is: ``stage()`` everything per-call and multiply
-referenced, ``track_memo()`` every session memo dict, and call
-``release_session_caches()`` at phase boundaries — after the bench
-warmup, between cold probes (tools/opt_probe.py --cold), in test
-teardown when a module needs a cold registry. At 100 TB the staged
-frames correspond to shared-stage tables a pipeline would write once
-and read per consumer; the release hook is the retention policy.
+- ``stage(df)`` for a per-call, multiply-referenced frame. Pass 2 of
+  the bench re-caches the identical plan and hits pass 1's entry, and
+  entries sharing a subtree (triangle wedges, dedup_minhash bands)
+  share one materialization. An r14 experiment that unpersisted each
+  entry's stages at the next entry's build regressed the steady-state
+  registry total 241 -> 276 s: the reuse is the point, so stages live
+  until an explicit release.
+- ``@per_session`` for a cross-entry INTERMEDIATE of ``(spark,
+  sf_dir)`` (shingle hashes, term frequencies, the co-occurrence edge
+  list): built once per (application, function, sf_dir) and handed
+  to every consumer, as the reference engine builds each intermediate
+  once. Never a registered entry's result. At cluster scale each is a
+  table a pipeline writes once and reads per consumer.
+
+``release_session_caches()`` drops both. It is for cold measurements
+and test teardown only: a release after the bench warmup was tried in
+r14 and reverted (bench.py records why), because the warmup's sf0.001
+entries never match a timed build and the async uncache storm
+destabilized the first timed passes.
 """
 
 from __future__ import annotations
 
-from typing import Any
+import functools
+import threading
+from typing import Any, Callable, TypeVar
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkRuntimeError
+from pyspark.sql import DataFrame, SparkSession
 
-# (applicationId, DataFrame) for every staged per-call frame; released
-# (unpersisted + dropped) only by release_session_caches(). Entries
-# from stopped applications are pruned opportunistically.
-_STAGED: list[tuple[str, DataFrame]] = []
+T = TypeVar("T")
 
-# Module-level memo dicts whose values hold persisted DataFrames
-# (directly, or inside tuples). Registered once at import time.
-_MEMO_DICTS: list[dict] = []
-
-
-def _app_id(df: DataFrame) -> str:
-    try:
-        return df.sparkSession.sparkContext.applicationId
-    except Exception:
-        return "?"
+# (applicationId, build function, sf_dir) -> its result. Entries of
+# any other application are dropped on insert (pytest creates many
+# sessions; their caches died with them).
+_MEMO: dict[tuple[str, Callable, str], Any] = {}
+_LOCK = threading.Lock()
 
 
 def stage(df: DataFrame) -> DataFrame:
-    """``df.cache()`` plus release-tracking.
-
-    Use for every per-call multiply-referenced frame. The cache serves
-    all references inside the one returned plan AND — via Spark's
-    plan-keyed cache lookup — every later identical build in the same
-    session (next bench pass, sibling entries sharing the subtree),
-    until release_session_caches() drops it."""
-    df.cache()
-    app = _app_id(df)
-    # prune references from stopped applications (pytest creates many
-    # sessions; their caches died with the session)
-    if _STAGED and _STAGED[0][0] != app:
-        _STAGED[:] = [e for e in _STAGED if e[0] == app]
-    _STAGED.append((app, df))
-    return df
+    """``df.cache()``: serves every reference inside the returned plan
+    and, through the plan-keyed registry, every later identical build
+    in the session until release_session_caches()."""
+    return df.cache()
 
 
-def track_memo(d: dict) -> dict:
-    """Register a module-level memo dict for release_session_caches()."""
-    _MEMO_DICTS.append(d)
-    return d
+def per_session(
+    build: Callable[[SparkSession, str], T]
+) -> Callable[[SparkSession, str], T]:
+    """Memoize ``build(spark, sf_dir)`` per (application, sf_dir).
 
+    The build runs outside the lock and the first stored result wins,
+    so concurrent first callers (the bench's warmup threads) all get
+    the same object; a losing duplicate costs only its plan build,
+    because its staged frames hit the winner's plan-keyed cache
+    entries. The decorator never caches: build functions stage()
+    what they materialize."""
 
-def _iter_frames(value: Any):
-    if isinstance(value, DataFrame):
-        yield value
-    elif isinstance(value, (tuple, list)):
-        for v in value:
-            if isinstance(v, DataFrame):
-                yield v
+    @functools.wraps(build)
+    def memoized(spark: SparkSession, sf_dir: str) -> T:
+        app = spark.sparkContext.applicationId
+        key = (app, build, sf_dir)
+        with _LOCK:
+            if key in _MEMO:
+                return _MEMO[key]
+        value = build(spark, sf_dir)
+        with _LOCK:
+            for stale in [k for k in _MEMO if k[0] != app]:
+                del _MEMO[stale]
+            return _MEMO.setdefault(key, value)
+
+    return memoized
 
 
 def release_session_caches() -> int:
-    """Unpersist every tracked frame (staged per-call frames + all
-    session memos) and clear the trackers. Returns the number of
-    frames released. Path-valued fixture memos (written parquet
-    layouts) are untouched — they are disk state, not cache registry
-    entries, and stay valid for the session. Never raises: frames
-    whose SparkContext already stopped are skipped."""
-    n = 0
-    staged, _STAGED[:] = list(_STAGED), []
-    for _, df in staged:
-        try:
-            df.unpersist(False)
-            n += 1
-        except Exception:
-            pass
-    for d in _MEMO_DICTS:
-        for v in list(d.values()):
-            for df in _iter_frames(v):
-                try:
-                    df.unpersist(False)
-                    n += 1
-                except Exception:
-                    pass
-        d.clear()
-    return n
+    """Clear the active session's SQL cache registry and the
+    per_session memo. Returns the number of cached RDDs released.
+    Path-valued fixture memos (written parquet layouts) are untouched:
+    they are disk state and stay valid for the session. Never raises:
+    with no live session there is nothing cached to release."""
+    with _LOCK:
+        _MEMO.clear()
+    try:
+        spark = SparkSession.active()
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        spark.catalog.clearCache()
+        return before - jsc.getPersistentRDDs().size()
+    except (PySparkRuntimeError, Py4JError):
+        return 0

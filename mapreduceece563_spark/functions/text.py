@@ -3,9 +3,13 @@
 These implement the reference engine's exact tokenize/normalize
 semantics (reference: /root/reference/mpi_mapreduce.c:119-161, see
 SURVEY.md §2.7) as composable column expressions. No Python UDFs:
-every function here stays inside whole-stage codegen, which is what
-makes the pipeline viable at 100 TB (JVM-side, vectorized, and
-Catalyst can push the downstream filters into the scan).
+everything runs JVM-side, which is what makes the pipeline viable at
+100 TB (no Python serialization, and Catalyst can push the downstream
+filters into the scan). Not everything is compiled, though: in Spark
+4.1 ``ArrayTransform`` and ``ArrayFilter`` implement
+``CodegenFallback``, so :func:`normalized_words_array` (``F.transform``
++ ``F.filter``) is interpreted: the generated stage code calls its
+``eval`` per row instead of compiling the lambdas.
 
 Reference semantics being reproduced:
 

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cachemgr import stage, track_memo
+from ..cachemgr import per_session, stage
 from ..functions.text import words_cte_sql
 from ..sources.catalog import load_table
 from .dedup import words_array
@@ -114,28 +114,22 @@ FROM pairs GROUP BY word
 """
 
 
-# (app_id, sf_dir) -> persisted symmetric co-occurrence edge list.
-# FIVE entries (pagerank_2iter, triangle_count/global_clustering,
-# bfs_hop_distance, link_prediction_jaccard, kcore_decomposition)
-# build the identical tokenize -> adjacent-pair -> distinct graph;
-# each used to rebuild AND separately persist it per call (leaking
-# one persisted copy per entry per session). The _SHINGLE_CACHE
-# contract: an intermediate edge frame, persisted once per (session,
-# sf_dir), recomputed from parquet in every fresh process — the
-# in-session analogue of the materialized edge table every graph
-# consumer would read at cluster scale.
-_COOC_EDGE_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
-
-
+# The symmetric co-occurrence edge list, built once per (session,
+# sf_dir). FIVE entries (pagerank_2iter, triangle_count/
+# global_clustering, bfs_hop_distance, link_prediction_jaccard,
+# kcore_decomposition) build the identical tokenize -> adjacent-pair
+# -> distinct graph; each used to rebuild AND separately persist it
+# per call (leaking one persisted copy per entry per session). The
+# dedup.doc_shingle_hashes contract: an intermediate edge frame,
+# recomputed from parquet in every fresh process — the in-session
+# analogue of the materialized edge table every graph consumer would
+# read at cluster scale.
+@per_session
 def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct symmetric adjacent-word edges (src, dst), no
     self-loops. The undirected co-occurrence graph, materialized as
     both directed arcs so out-degree == degree; persisted once per
     (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _COOC_EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
     arr = _doc_word_arrays(spark, sf_dir)
     n = F.size(F.col("ws"))
     pairs = F.when(
@@ -153,11 +147,9 @@ def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
     )
-    out = e.union(
+    return e.union(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().persist()
-    _COOC_EDGE_CACHE[key] = out
-    return out
+    ).distinct().transform(stage)
 
 
 def pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1011,7 +1003,7 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             # before the next round).
             deg = edges.groupBy("src").agg(
                 F.count(F.lit(1)).alias("deg")
-            ).cache()
+            ).transform(stage)
             keep = deg.filter(F.col("deg") >= k).select("src")
             new_edges = (
                 edges.join(keep, "src", "left_semi")

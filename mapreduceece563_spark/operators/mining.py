@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cachemgr import stage, track_memo
+from ..cachemgr import per_session, stage
 from ..sources.catalog import load_table
 
 N_BINS = 20
@@ -435,34 +435,27 @@ LIMIT {BASKET_TOP_K}
 
 COPURCHASE_TOP = 20
 
-# (app_id, sf_dir) -> persisted (pa, pb, n) basket-pair counts. FOUR
-# entries (copurchase_pairs, copurchase_degree_distribution,
+# (pa, pb, n) basket-pair counts, built once per (session, sf_dir).
+# FOUR entries (copurchase_pairs, copurchase_degree_distribution,
 # degree_assortativity, label_propagation_2iter) start from the
 # identical distinct-basket self-join over lineitem; each used to
-# rebuild it per call (~1.4 s at sf0.1). The _SHINGLE_CACHE
+# rebuild it per call (~1.4 s at sf0.1). The dedup.doc_shingle_hashes
 # contract: an intermediate frame (pre-threshold, pre-top-k, pre-
-# degree — not any registered result), persisted once per (session,
-# sf_dir), recomputed from parquet in every fresh process. At
-# cluster scale the equivalent is the materialized co-purchase edge
-# table every graph consumer reads.
-_BASKET_PAIR_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
-
-
+# degree — not any registered result), recomputed from parquet in
+# every fresh process. At cluster scale the equivalent is the
+# materialized co-purchase edge table every graph consumer reads.
+@per_session
 def order_part_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(pa, pb, n) with pa < pb: for every part pair, the number of
     order baskets containing both (baskets deduplicated to distinct
     part sets first); persisted once per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BASKET_PAIR_CACHE.get(key)
-    if cached is not None:
-        return cached
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
     a, b = li.alias("a"), li.alias("b")
-    out = (
+    return (
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -473,10 +466,8 @@ def order_part_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.l_partkey").alias("pb"),
         )
         .agg(F.count("*").alias("n"))
-        .persist()
+        .transform(stage)
     )
-    _BASKET_PAIR_CACHE[key] = out
-    return out
 
 
 def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

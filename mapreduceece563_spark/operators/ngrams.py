@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cachemgr import stage, track_memo
+from ..cachemgr import per_session, stage
 from ..functions.text import MAX_WORD_LEN, NORMALIZE_SQL
 from ..sources.catalog import load_table
 from .dedup import words_array
@@ -32,33 +32,25 @@ def _words_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", words_array(F.col("text")).alias("words"))
 
 
-# (app_id, sf_dir) -> persisted (doc_id, word, tf) term frequencies.
-# Both TF-IDF consumers (top-terms ranking and the cosine verify tier)
-# start from the same tokenize -> per-doc term-count stage; document
-# frequency derives from it with one more groupBy (tf is already one
-# row per (doc, word)). Persisting it once per session mirrors the
-# shingle-stage cache in operators/dedup.py; the cluster equivalent is
-# a materialized term-frequency table.
-_TF_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
-
-
+# (doc_id, word, tf) term frequencies, built once per (session,
+# sf_dir). Both TF-IDF consumers (top-terms ranking and the cosine
+# verify tier) start from the same tokenize -> per-doc term-count
+# stage; document frequency derives from it with one more groupBy (tf
+# is already one row per (doc, word)). Persisting it once per session
+# mirrors the shingle stage in operators/dedup.py; the cluster
+# equivalent is a materialized term-frequency table.
+@per_session
 def _tf_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TF_CACHE.get(key)
-    if cached is not None:
-        return cached
     tokens = _words_per_doc(spark, sf_dir).select(
         "doc_id", F.explode("words").alias("word")
     )
-    tf = tokens.groupBy("doc_id", "word").agg(
+    return tokens.groupBy("doc_id", "word").agg(
         F.count("*").alias("tf")
-    ).persist()
-    _TF_CACHE[key] = tf
-    return tf
+    ).transform(stage)
 
 
-# (app_id, sf_dir) -> persisted (doc_id, word, tf) over 3-word
-# SHINGLES (Broder w-shingling, w=3). The all-pairs cosine tier runs
+# (doc_id, word, tf) over 3-word SHINGLES, built once per (session,
+# sf_dir) (Broder w-shingling, w=3). The all-pairs cosine tier runs
 # in shingle space, not unigrams: the synthetic corpus has a 31-word
 # vocabulary, so unigram tf-idf is 31-dimensional and every doc pair
 # co-occurs on rare terms — prefix filtering degenerates to the full
@@ -67,14 +59,8 @@ def _tf_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ~27k dims with max df 25/5000 at sf0.1, restoring the
 # discrimination the pruning depends on — and w-shingles are the
 # standard document near-dup representation anyway.
-_SHINGLE_TF_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
-
-
+@per_session
 def _shingle_tf_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_TF_CACHE.get(key)
-    if cached is not None:
-        return cached
     w = _words_per_doc(spark, sf_dir)
     n = F.size(F.col("words"))
     grams = F.when(
@@ -90,11 +76,9 @@ def _shingle_tf_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).otherwise(F.array().cast("array<string>"))
     tokens = w.select("doc_id", F.explode(grams).alias("word"))
-    tf = tokens.groupBy("doc_id", "word").agg(
+    return tokens.groupBy("doc_id", "word").agg(
         F.count("*").alias("tf")
-    ).persist()
-    _SHINGLE_TF_CACHE[key] = tf
-    return tf
+    ).transform(stage)
 
 
 def _n_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1162,7 +1146,7 @@ def allpairs_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     The feature space is w=3 shingles, not unigrams, for two reasons:
     (1) word shingles are the standard near-dup representation (order
     sensitivity); (2) pruning needs dimensionality — see the
-    _SHINGLE_TF_CACHE note for the measured unigram/bigram
+    _shingle_tf_stage note for the measured unigram/bigram
     degeneration on this corpus.
 
     Canonical term order is (df ASC, word) — rarest first. A doc's
@@ -1489,13 +1473,11 @@ ZIPF_SLOPE_ORACLE = _zipf_slope_sql()
 SURPRISAL_KEEP_PCTS = (10, 20, 30, 40, 50, 60, 70, 80, 90)
 
 
-# (app_id, sf_dir) -> eagerly materialized per-doc (v, n_bigrams)
-# surprisal score frame for the curve (one row per doc, two ints) —
-# the _SHINGLE_CACHE contract; doc_lm_surprisal itself stays
-# unmemoized and recomputes its scoring pass per call.
-_SURPRISAL_SCORE_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
-
-
+# Eagerly materialized per-doc (v, n_bigrams) surprisal score frame
+# for the curve (one row per doc, two ints), built once per (session,
+# sf_dir) — the dedup.doc_shingle_hashes contract; doc_lm_surprisal
+# itself stays unmemoized and recomputes its scoring pass per call.
+@per_session
 def _surprisal_score_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_lm_surprisal(spark, sf_dir).select(
         F.round(F.col("avg_surprisal") * 1_000_000, 0)
@@ -1534,14 +1516,10 @@ def surprisal_filter_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uncached, the whole doc_lm_surprisal scoring pipeline
     # (tokenize + bigram LM + score-back joins) re-ran twice
     # (6 parquet scans in the before-plan). One row per doc, two
-    # ints. The memo (keyed like _SHINGLE_CACHE) also spares the
-    # curve rebuilding the scoring pass on every call;
-    # doc_lm_surprisal itself stays unmemoized.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    s = _SURPRISAL_SCORE_CACHE.get(key)
-    if s is None:
-        s = _surprisal_score_frame(spark, sf_dir)
-        _SURPRISAL_SCORE_CACHE[key] = s
+    # ints. The per_session memo also spares the curve rebuilding the
+    # scoring pass on every call; doc_lm_surprisal itself stays
+    # unmemoized.
+    s = _surprisal_score_frame(spark, sf_dir)
     hist = s.groupBy("v").agg(
         F.count(F.lit(1)).alias("_d"), F.sum("n_bigrams").alias("_m")
     )

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cachemgr import stage, track_memo
+from ..cachemgr import per_session, stage
 from ..sources.catalog import load_table
 
 N_QUERIES = 10          # vec_id < 10 are the kNN query vectors
@@ -1177,18 +1177,6 @@ RECALL_NPROBES = (1, 2, 3)
 RECALL_SCALE = 1_000_000
 
 
-# (app_id, sf_dir) -> persisted (gt, ann) scaffold frames. THREE
-# entries (ivf_recall_tuning, ann_rank_quality, mrr_at_k) derive
-# their metric rollups from the identical brute-force ground truth +
-# probed IVF result list; each used to rebuild both (14 parquet
-# scans apiece in the r13 before-plans, ~1.6 s per entry isolated).
-# Same contract as dedup's _SHINGLE_CACHE: intermediate frames
-# (pre-metric, per-(query, neighbor) rank rows — not any registered
-# result), persisted once per (session, sf_dir), recomputed from
-# parquet in every fresh process.
-_IVF_TUNING_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = track_memo({})
-
-
 def _ivf_tuning_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -1198,15 +1186,30 @@ def _ivf_tuning_frames(
     (nprobe, query) WITH its rank column `_rk`, and nprobes the tiny
     probe-budget frame. gt/ann are persisted once per (session,
     sf_dir); nprobes is a literal frame, rebuilt per call."""
-    nprobes_lit = spark.range(1).select(
+    gt, ann = _ivf_gt_ann(spark, sf_dir)
+    return gt, ann, _nprobes_frame(spark)
+
+
+def _nprobes_frame(spark: SparkSession) -> DataFrame:
+    return spark.range(1).select(
         F.explode(F.array(*[F.lit(p) for p in RECALL_NPROBES])).alias(
             "nprobe"
         )
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _IVF_TUNING_CACHE.get(key)
-    if cached is not None:
-        return cached[0], cached[1], nprobes_lit
+
+
+# The (gt, ann) scaffold frames, built once per (session, sf_dir).
+# THREE entries (ivf_recall_tuning, ann_rank_quality, mrr_at_k)
+# derive their metric rollups from the identical brute-force ground
+# truth + probed IVF result list; each used to rebuild both (14
+# parquet scans apiece in the r13 before-plans, ~1.6 s per entry
+# isolated). Same contract as dedup.doc_shingle_hashes: intermediate
+# frames (pre-metric, per-(query, neighbor) rank rows — not any
+# registered result), recomputed from parquet in every fresh process.
+@per_session
+def _ivf_gt_ann(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
     n = _norms(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings", spread=True).select(
         "vec_id", "label"
@@ -1311,7 +1314,7 @@ def _ivf_tuning_frames(
             ).alias("_cos"),
         )
     )
-    nprobes = nprobes_lit
+    nprobes = _nprobes_frame(spark)
     per_probe_w = Window.partitionBy("nprobe", "query_id").orderBy(
         F.desc("_cos"), F.asc("neighbor_id")
     )
@@ -1323,10 +1326,7 @@ def _ivf_tuning_frames(
         .filter(F.col("_rk") <= TOP_K)
         .select("nprobe", "query_id", "neighbor_id", "_rk")
     )
-    gt = gt.persist()
-    ann = ann.persist()
-    _IVF_TUNING_CACHE[key] = (gt, ann)
-    return gt, ann, nprobes
+    return stage(gt), stage(ann)
 
 
 def ivf_recall_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2154,9 +2154,14 @@ SRP_SIGNATURE_SQL = _srp_sql()
 SRP_BANDS = 4          # 4 bands x 8 bits over the 32-bit signature
 SRP_HAMMING_MAX = 3    # <= 3 differing bits => provably >= 1 clean band
 
-# (app_id, sf_dir) -> persisted (vec_id, srp_sig) frame for the
-# banding consumer (srp_signature itself stays unmemoized)
-_SRP_SIG_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
+# (vec_id, srp_sig) for the banding consumer, built once per (session,
+# sf_dir): the map-only signature pass is O(d * SRP_BITS) multiplies
+# per row and the consumer re-ran it per call (r13; the
+# dedup.doc_shingle_hashes contract; srp_signature itself stays
+# unmemoized).
+@per_session
+def _srp_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return stage(srp_signature(spark, sf_dir).select("vec_id", "srp_sig"))
 
 
 def srp_hamming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2183,19 +2188,7 @@ def srp_hamming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets the standard salt-split. Dup pairs found in several bands
     collapse via the (a, b) groupBy, which rides the same exchange.
     """
-    # memoized per (session, sf_dir) — the map-only signature pass is
-    # O(d * SRP_BITS) multiplies per row and the banding consumer
-    # re-ran it per call (r13; the _SHINGLE_CACHE contract;
-    # srp_signature itself stays unmemoized).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sigs = _SRP_SIG_CACHE.get(key)
-    if sigs is None:
-        sigs = (
-            srp_signature(spark, sf_dir)
-            .select("vec_id", "srp_sig")
-            .persist()
-        )
-        _SRP_SIG_CACHE[key] = sigs
+    sigs = _srp_sigs(spark, sf_dir)
     width = SRP_BITS // SRP_BANDS
     mask = (1 << width) - 1
     banded = sigs.select(

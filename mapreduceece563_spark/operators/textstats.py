@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cachemgr import stage, track_memo
+from ..cachemgr import per_session, stage
 from ..functions.hashing import poly_hash, poly_hash_sql
 from ..functions.text import MAX_WORD_LEN, NORMALIZE_SQL
 from ..sources.catalog import load_table
@@ -156,27 +156,20 @@ FROM h
 
 # --- quality scoring (map-only) --------------------------------------
 
-# (app_id, sf_dir) -> persisted per-doc integer feature counts.
+# Per-doc integer feature counts, built once per (session, sf_dir).
 # SIXTEEN entries derive their metric from quality_score, and each
 # used to re-run the tokenize + stopword-filter + alpha-regex scan
 # (~0.28 s isolated at sf0.1) per call — and often several times per
 # call before their own frames were staged. The counts frame is an
-# INTERMEDIATE (doc_id + four int64 counts, pre-ratio, pre-score):
-# the _SHINGLE_CACHE contract — persisted once per (session,
-# sf_dir), recomputed from parquet in every fresh process. At
-# cluster scale the equivalent is a materialized per-doc feature
-# table read by every audit query.
-_QCOUNT_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
-
-
+# INTERMEDIATE (doc_id + four int64 counts, pre-ratio, pre-score),
+# recomputed from parquet in every fresh process. At cluster scale
+# the equivalent is a materialized per-doc feature table read by
+# every audit query.
+@per_session
 def quality_feature_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_tokens, n_stopwords, n_chars, alpha_chars) integer
     feature counts in one map pass; persisted once per (session,
     sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _QCOUNT_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     docs = docs.select(
         "doc_id", "text", words_array(F.col("text")).alias("_words")
@@ -192,8 +185,7 @@ def quality_feature_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(
             F.regexp_replace(F.lower(F.col("text")), "[^a-z]", "")
         ).cast("long").alias("alpha_chars"),
-    ).persist()
-    _QCOUNT_CACHE[key] = out
+    ).transform(stage)
     return out
 
 

@@ -108,7 +108,9 @@ def _scan_is_narrow(spark: SparkSession, sf_dir: str, name: str) -> bool:
     mirrors Spark's packing rule: each file contributes
     ceil(size / maxPartitionBytes) splits (openCostInBytes padding
     only matters for many-tiny-file layouts, where the estimate is
-    already >= cores or the spread is moot)."""
+    already >= cores or the spread is moot). Fails closed: a path this
+    cannot list (a URI, a missing table) is never narrow, so an
+    unknown scan never gets a full-scan shuffle."""
     app = spark.sparkContext.applicationId
     key = (app, sf_dir, name)
     cached = _NARROW_CACHE.get(key)
@@ -132,7 +134,7 @@ def _scan_is_narrow(spark: SparkSession, sf_dir: str, name: str) -> bool:
             splits += max(1, -(-_os.path.getsize(f) // max_bytes))
         except OSError:
             splits += 1
-    narrow = splits < spark.sparkContext.defaultParallelism
+    narrow = 0 < splits < spark.sparkContext.defaultParallelism
     _NARROW_CACHE[key] = narrow
     return narrow
 

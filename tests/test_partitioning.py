@@ -118,3 +118,14 @@ def test_price_percentiles_sketch_within_tol(spark):
             f"{r['o_orderpriority']}: sketched percentile outside "
             f"tolerance ({r['p50_ok']=}, {r['p95_ok']=})"
         )
+
+
+def test_scan_spread_fails_closed_on_unlistable_path(spark):
+    """The spread is a full-scan shuffle, so it fires only when the
+    table's files are listed AND too few: a path the gate cannot list
+    (a ``file:`` URI) plans no RoundRobinPartitioning, while the plain
+    path to the same single-file table still plans exactly one."""
+    uri = load_table(spark, "file:" + SF_DIR, "documents", spread=True)
+    plain = load_table(spark, SF_DIR, "documents", spread=True)
+    assert plan_string(uri, "simple").count("RoundRobinPartitioning") == 0
+    assert plan_string(plain, "simple").count("RoundRobinPartitioning") == 1

@@ -12,7 +12,7 @@ make the "similarity join avoids the cross product" demonstration
 vacuous. The operator runs in 3-word-shingle TF-IDF space for the
 same reason (the unigram space is 31-dimensional here and defeats
 prefix pruning outright — measured numbers in
-operators/ngrams.py::_SHINGLE_TF_CACHE)."""
+operators/ngrams.py::_shingle_tf_stage)."""
 
 from __future__ import annotations
 
