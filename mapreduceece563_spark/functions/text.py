@@ -5,11 +5,14 @@ semantics (reference: /root/reference/mpi_mapreduce.c:119-161, see
 SURVEY.md §2.7) as composable column expressions. No Python UDFs:
 everything runs JVM-side, which is what makes the pipeline viable at
 100 TB (no Python serialization, and Catalyst can push the downstream
-filters into the scan). Not everything is compiled, though: in Spark
-4.1 ``ArrayTransform`` and ``ArrayFilter`` implement
-``CodegenFallback``, so :func:`normalized_words_array` (``F.transform``
-+ ``F.filter``) is interpreted: the generated stage code calls its
-``eval`` per row instead of compiling the lambdas.
+filters into the scan).
+
+Normalization is line-level: one ``lower`` and one :data:`LINE_STRIP_RE`
+pass per line, then ``explode(split(...))`` and a scalar filter, all
+codegen'd. The one higher-order function left is the ``F.filter`` in
+:func:`normalized_words_array`, for array callers (``ArrayFilter`` is
+``CodegenFallback``, so interpreted). :func:`normalize_word` stays for
+per-token callers.
 
 Reference semantics being reproduced:
 
@@ -37,6 +40,17 @@ MAX_WORD_LEN = 70  # reference WORD_LENGTH, mpi_mapreduce.c:28
 # leading/trailing runs of non-alphabetics are removed in one shot.
 _STRIP_RE = r"^[^a-z]+|[^a-z]+$"
 
+# The same strip for every space-delimited token of a lowered line at
+# once: branch 1 drops a token's maximal leading non-letter run when a
+# letter follows, branch 2 a maximal non-letter run after a letter that
+# ends the token; an all-non-letter token matches neither (rule 2).
+# Possessive runs make each lookahead test one character; ``(?![^ ])`` is
+# a true end of token (Java's ``$`` also matches before a final line
+# terminator). ``lower(line)`` equals the lowered tokens joined: a space
+# is neither cased nor case-ignorable, so no casing context (Greek final
+# sigma) crosses it.
+LINE_STRIP_RE = r"(?<![^ ])[^a-z ]++(?=[a-z])|(?<=[a-z])[^a-z ]++(?![^ ])"
+
 
 def normalize_word(token: Column) -> Column:
     """Exact ``normalizeWord`` semantics as a native expression.
@@ -51,34 +65,33 @@ def normalize_word(token: Column) -> Column:
     return F.when(stripped == "", lowered).otherwise(stripped)
 
 
+def _normalized_tokens(text: Column) -> Column:
+    """split(strip(lower(line))): every token normalized, empty and
+    over-length tokens still present."""
+    return F.split(F.regexp_replace(F.lower(text), LINE_STRIP_RE, ""), " ")
+
+
+def _kept(word: Column) -> Column:
+    return (word != "") & (F.length(word) <= MAX_WORD_LEN)
+
+
 def normalized_words_array(text: Column) -> Column:
-    """split -> normalize -> filter as ARRAY lambda functions, so the
-    regex evaluates exactly once per token: with the scalar
-    explode-project-filter chain, Catalyst pushes the survivor
-    predicates below the projection and re-inlines the whole
-    normalize expression into them (2-3 regex evaluations per token
-    — measured ~25% of the 13 MB wordcount wall). Array elements are
-    materialized values; the filter touches computed strings only."""
-    normalized = F.transform(F.split(text, " "), normalize_word)
-    return F.filter(
-        normalized,
-        lambda w: (w != "") & (F.length(w) <= MAX_WORD_LEN),
-    )
+    """The surviving normalized words of one line, as an array (for
+    callers that size, hash or shingle per line). The line-level split
+    wrapped in one ``F.filter``; a caller that references the array
+    more than once should project it first so it evaluates once."""
+    return F.filter(_normalized_tokens(text), _kept)
 
 
 def tokenize_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     """lines -> one row per surviving normalized word (column ``word``).
 
-    Blank lines are skipped (reference F1), tokens split on single
-    space (F2), normalized (F4), then empty (F3) and over-length (F5)
-    words dropped — F2-F5 inside one array expression (see
-    :func:`normalized_words_array`) so normalization runs once per
-    token, then a bare explode.
+    Blank lines are skipped (reference F1), the lowered line is
+    stripped per token (F4) and split on single space (F2), then empty
+    (F3) and over-length (F5) words dropped by a scalar filter after
+    the explode.
     """
-    lines = df.filter(F.col(text_col).isNotNull() & (F.col(text_col) != ""))
-    return lines.select(
-        F.explode(normalized_words_array(F.col(text_col))).alias("word")
-    )
+    return _words(df, text_col)
 
 
 def words_from_documents(df: DataFrame, *extra_cols: str) -> DataFrame:
@@ -87,11 +100,16 @@ def words_from_documents(df: DataFrame, *extra_cols: str) -> DataFrame:
     Same pipeline as :func:`tokenize_lines` but preserves the listed
     document columns (e.g. ``doc_id``) alongside each word.
     """
-    lines = df.filter(F.col("text").isNotNull() & (F.col("text") != ""))
-    return lines.select(
-        *extra_cols,
-        F.explode(normalized_words_array(F.col("text"))).alias("word"),
+    return _words(df, "text", *extra_cols)
+
+
+def _words(df: DataFrame, text_col: str, *extra_cols: str) -> DataFrame:
+    text = F.col(text_col)
+    lines = df.filter(text.isNotNull() & (text != ""))
+    words = lines.select(
+        *extra_cols, F.explode(_normalized_tokens(text)).alias("word")
     )
+    return words.filter(_kept(F.col("word")))
 
 
 # --- SQL fragments for the DuckDB oracle ------------------------------

@@ -36,8 +36,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import HASH_MOD, poly_hash, poly_hash_sql
+from ..functions.text import normalized_words_array
 from ..sources.catalog import load_table
-from .dedup import doc_shingle_hashes, shingle_hashes_cte_sql, words_array
+from .dedup import doc_shingle_hashes, shingle_hashes_cte_sql
 from .ngrams import _words_cte
 from .textstats import _words_sql
 
@@ -298,7 +299,7 @@ def passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents", spread=True)
         .select("doc_id", "text")
         .filter(F.col("text").isNotNull() & (F.col("text") != ""))
-        .select("doc_id", words_array(F.col("text")).alias("ws"))
+        .select("doc_id", normalized_words_array(F.col("text")).alias("ws"))
     )
     n = F.size(F.col("ws"))
     k = F.expr(f"size(ws) div {PASSAGE_LEN}")
@@ -425,7 +426,7 @@ def source_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = docs.filter(F.col("text").isNotNull() & (F.col("text") != ""))
     sv = docs.select(
-        "source", F.explode(words_array(F.col("text"))).alias("word")
+        "source", F.explode(normalized_words_array(F.col("text"))).alias("word")
     ).distinct()
     sizes = sv.groupBy("source").agg(F.count("*").alias("_vs"))
     a, b = sv.alias("a"), sv.alias("b")
@@ -599,7 +600,7 @@ def domain_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = docs.select(
         F.concat(F.col("source"), F.lit(".example.com")).alias("domain"),
         poly_hash(F.col("text")).alias("digest"),
-        F.size(words_array(F.col("text"))).cast("long").alias("n_tokens"),
+        F.size(normalized_words_array(F.col("text"))).cast("long").alias("n_tokens"),
     )
     return per.groupBy("domain").agg(
         F.count("*").alias("n_docs"),
@@ -650,7 +651,7 @@ def dataset_card_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.col("n_chars").cast("long").alias("n_chars"),
         poly_hash(F.col("text")).alias("digest"),
-        F.size(words_array(F.col("text"))).cast("long").alias("n_tokens"),
+        F.size(normalized_words_array(F.col("text"))).cast("long").alias("n_tokens"),
     )
     return per.agg(
         F.count("*").alias("n_docs"),
@@ -742,7 +743,7 @@ def udtf_word_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     words = docs.select(
-        "doc_id", words_array(F.col("text")).alias("words")
+        "doc_id", normalized_words_array(F.col("text")).alias("words")
     )
     view = "udtf_chunker_src"
     words.createOrReplaceTempView(view)
@@ -1053,7 +1054,7 @@ def token_gini_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engines)
     docs = load_table(spark, sf_dir, "documents", spread=True).select(
         "source",
-        F.size(words_array(F.coalesce(F.col("text"), F.lit(""))))
+        F.size(normalized_words_array(F.coalesce(F.col("text"), F.lit(""))))
         .cast("long")
         .alias("_tok"),
     )
@@ -1162,7 +1163,7 @@ def simpson_vocab_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents", spread=True).select(
         "source",
-        F.explode(words_array(F.col("text"))).alias("_w"),
+        F.explode(normalized_words_array(F.col("text"))).alias("_w"),
     )
     per_word = docs.groupBy("source", "_w").agg(
         F.count(F.lit(1)).alias("_c")
@@ -1366,7 +1367,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     words = (
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", "source", words_array(F.col("text")).alias("_ws"))
+        .select("doc_id", "source", normalized_words_array(F.col("text")).alias("_ws"))
         .select(
             "doc_id",
             "source",
@@ -1406,7 +1407,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_tokens = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(words_array(F.col("text"))).cast("long").alias("_t"),
+        F.size(normalized_words_array(F.col("text"))).cast("long").alias("_t"),
     )
     tokens_k = (
         doc_tokens.join(cuts, "source")
@@ -1609,7 +1610,7 @@ def chao1_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tok = load_table(spark, sf_dir, "documents", spread=True).select(
         "source",
-        F.explode(words_array(F.col("text"))).alias("_w"),
+        F.explode(normalized_words_array(F.col("text"))).alias("_w"),
     )
     per_word = tok.groupBy("source", "_w").agg(
         F.count(F.lit(1)).alias("_c")

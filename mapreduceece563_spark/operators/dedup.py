@@ -36,7 +36,7 @@ from ..functions.hashing import (
     poly_hash,
     poly_hash_sql,
 )
-from ..functions.text import MAX_WORD_LEN, NORMALIZE_SQL, normalize_word
+from ..functions.text import MAX_WORD_LEN, NORMALIZE_SQL, normalized_words_array
 from ..sources.catalog import load_table
 
 # Shingle document-frequency cap for the Jaccard join: corpus-relative,
@@ -66,14 +66,6 @@ DF_CAP_SQL = (
 
 
 # --- shared shingle machinery ----------------------------------------
-
-def words_array(text_col: Column) -> Column:
-    """Normalized-word array for one line (array-valued, map-only)."""
-    normed = F.transform(F.split(text_col, " "), normalize_word)
-    return F.filter(
-        normed, lambda w: (w != "") & (F.length(w) <= MAX_WORD_LEN)
-    )
-
 
 def shingle_hashes_expr(hws: Column) -> Column:
     """Distinct 3-shingle hashes from an array of per-word hashes.
@@ -117,7 +109,7 @@ def doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The words array and the word-hash array are each materialized as
     their OWN projection before being referenced multiple times.
-    Inlining ``words_array`` into the shingle expression would
+    Inlining ``normalized_words_array`` into the shingle expression would
     duplicate the whole normalize chain once per element_at reference
     (~6x the regex work per row — measured 31s -> 0.8s at sf0.1);
     with a column reference, Catalyst's CollapseProject keeps the
@@ -127,7 +119,7 @@ def doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     docs = docs.filter(F.col("text").isNotNull() & (F.col("text") != ""))
-    words = docs.select("doc_id", words_array(F.col("text")).alias("words"))
+    words = docs.select("doc_id", normalized_words_array(F.col("text")).alias("words"))
     hws = words.select(
         "doc_id", F.transform(F.col("words"), poly_hash).alias("hws")
     )
@@ -857,7 +849,7 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     docs = docs.filter(F.col("text").isNotNull() & (F.col("text") != ""))
-    words = docs.select("doc_id", words_array(F.col("text")).alias("words"))
+    words = docs.select("doc_id", normalized_words_array(F.col("text")).alias("words"))
     hws = words.select(
         "doc_id", F.transform(F.col("words"), poly_hash).alias("hws")
     )

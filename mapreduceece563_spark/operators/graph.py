@@ -40,9 +40,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cachemgr import per_session, stage
-from ..functions.text import words_cte_sql
+from ..functions.text import normalized_words_array, words_cte_sql
 from ..sources.catalog import load_table
-from .dedup import words_array
 from .ngrams import _words_cte
 
 # Max doc_ids kept per posting list (ascending doc_id): bounds row
@@ -64,7 +63,7 @@ def _doc_word_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     docs = docs.filter(F.col("text").isNotNull() & (F.col("text") != ""))
-    return docs.select("doc_id", words_array(F.col("text")).alias("ws"))
+    return docs.select("doc_id", normalized_words_array(F.col("text")).alias("ws"))
 
 
 def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:

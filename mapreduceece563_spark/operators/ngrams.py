@@ -14,9 +14,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cachemgr import per_session, stage
-from ..functions.text import MAX_WORD_LEN, NORMALIZE_SQL
+from ..functions.text import MAX_WORD_LEN, NORMALIZE_SQL, normalized_words_array
 from ..sources.catalog import load_table
-from .dedup import words_array
 
 TOP_BIGRAMS = 50
 TFIDF_TOP_TERMS = 3
@@ -29,7 +28,7 @@ def _words_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     docs = docs.filter(F.col("text").isNotNull() & (F.col("text") != ""))
-    return docs.select("doc_id", words_array(F.col("text")).alias("words"))
+    return docs.select("doc_id", normalized_words_array(F.col("text")).alias("words"))
 
 
 # (doc_id, word, tf) term frequencies, built once per (session,
@@ -803,7 +802,7 @@ def js_divergence_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("text").isNotNull()
         & (F.col("text") != "")
     )
-    tokens = docs.select("lang", F.explode(words_array(F.col("text"))).alias("word"))
+    tokens = docs.select("lang", F.explode(normalized_words_array(F.col("text"))).alias("word"))
     counts = tokens.groupBy("word").agg(
         F.sum(F.when(F.col("lang") == JSD_LANG_A, 1).otherwise(0)).alias("a"),
         F.sum(F.when(F.col("lang") == JSD_LANG_B, 1).otherwise(0)).alias("b"),
@@ -1662,7 +1661,7 @@ def g2_keyness_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tok = load_table(spark, sf_dir, "documents", spread=True).select(
         "source",
-        F.explode(words_array(F.col("text"))).alias("word"),
+        F.explode(normalized_words_array(F.col("text"))).alias("word"),
     )
     # cached: the (source, word) counts feed the global rollup, the
     # source marginals AND the scoring join; uncached, the tokenize

@@ -18,9 +18,8 @@ from pyspark.sql import functions as F
 
 from ..cachemgr import per_session, stage
 from ..functions.hashing import poly_hash, poly_hash_sql
-from ..functions.text import MAX_WORD_LEN, NORMALIZE_SQL
+from ..functions.text import MAX_WORD_LEN, NORMALIZE_SQL, normalized_words_array
 from ..sources.catalog import load_table
-from .dedup import words_array
 
 # Marker stopwords per language for the language-ID heuristic.
 # Tiny on purpose: the operator shape (token -> marker join -> argmax)
@@ -51,7 +50,7 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # column keeps the normalize chain evaluated once per row instead
     # of once per use (CollapseProject guards multi-referenced
     # expensive expressions)
-    docs = docs.select("doc_id", words_array(F.col("text")).alias("_words"))
+    docs = docs.select("doc_id", normalized_words_array(F.col("text")).alias("_words"))
     words = F.col("_words")
     lens = F.transform(words, lambda w: F.length(w).cast("long"))
     total_len = F.aggregate(lens, F.lit(0).cast("long"), lambda a, x: a + x)
@@ -98,7 +97,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     staged = docs.select(
-        "doc_id", words_array(F.col("text")).alias("_words")
+        "doc_id", normalized_words_array(F.col("text")).alias("_words")
     )
     langs = sorted(LANG_MARKERS)
     hits = staged.select(
@@ -172,7 +171,7 @@ def quality_feature_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_dir)."""
     docs = load_table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     docs = docs.select(
-        "doc_id", "text", words_array(F.col("text")).alias("_words")
+        "doc_id", "text", normalized_words_array(F.col("text")).alias("_words")
     )
     words = F.col("_words")
     out = docs.select(
@@ -278,13 +277,11 @@ def training_data_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes every per-doc signal (all map-only expressions), one
     window handles the dedup — the whole filter is two shuffles
     (dedup partition + nothing else) regardless of corpus size."""
-    from .dedup import words_array as _wa
-
     docs = load_table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text", "lang"
     )
     staged = docs.select(
-        "doc_id", "text", "lang", _wa(F.col("text")).alias("_words")
+        "doc_id", "text", "lang", normalized_words_array(F.col("text")).alias("_words")
     )
     words = F.col("_words")
     n = F.size(words).cast("long")
@@ -356,7 +353,7 @@ def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = docs.select(
         F.md5(F.col("text").cast("binary")).alias("_k"),
         F.length("text").cast("long").alias("_nc"),
-        F.size(words_array(F.col("text"))).cast("long").alias("_nt"),
+        F.size(normalized_words_array(F.col("text"))).cast("long").alias("_nt"),
     )
     base = staged.agg(
         F.count("*").alias("n_docs"),
@@ -366,7 +363,7 @@ def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("_k").alias("n_distinct_texts"),
     )
     vocab = (
-        docs.select(F.explode(words_array(F.col("text"))).alias("w"))
+        docs.select(F.explode(normalized_words_array(F.col("text"))).alias("w"))
         .agg(F.countDistinct("w").alias("vocab_size"))
     )
     return base.crossJoin(vocab).select(
@@ -460,7 +457,7 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     docs = docs.filter(F.col("text").isNotNull() & (F.col("text") != ""))
-    words = docs.select("doc_id", words_array(F.col("text")).alias("words"))
+    words = docs.select("doc_id", normalized_words_array(F.col("text")).alias("words"))
     hws = words.select(
         "doc_id",
         "words",
@@ -1026,7 +1023,7 @@ def quality_classifier_features(
         "doc_id", "text"
     )
     docs = docs.select(
-        "doc_id", "text", words_array(F.col("text")).alias("_words")
+        "doc_id", "text", normalized_words_array(F.col("text")).alias("_words")
     )
     words = F.col("_words")
     n = F.size(words).cast("long")
@@ -1428,13 +1425,12 @@ def filter_disparate_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     |langs| rows, and the best-language pick + ratio arithmetic ride
     that tiny frame (a broadcast of one row).
     """
-    from .dedup import words_array as _wa
-
     docs = load_table(spark, sf_dir, "documents", spread=True).select(
         "lang", "text"
     )
-    staged = docs.select("lang", _wa(F.col("text")).alias("_words"),
-                         F.col("text"))
+    staged = docs.select(
+        "lang", normalized_words_array(F.col("text")).alias("_words"), "text"
+    )
     words = F.col("_words")
     n = F.size(words).cast("long")
     stop_hits = F.size(

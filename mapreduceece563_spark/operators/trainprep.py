@@ -493,7 +493,7 @@ def token_balanced_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import HASH_MOD
     from ..functions.text import MAX_WORD_LEN, NORMALIZE_SQL  # noqa: F401
     from .corpus import SAMPLE_A, SAMPLE_B
-    from .dedup import words_array
+    from ..functions.text import normalized_words_array
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
@@ -501,7 +501,7 @@ def token_balanced_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tok = (
         F.when(
             F.col("text").isNotNull() & (F.col("text") != ""),
-            F.size(words_array(F.col("text"))),
+            F.size(normalized_words_array(F.col("text"))),
         )
         .otherwise(0)
         .cast("long")

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cachemgr import stage
-from ..functions.text import tokenize_lines, words_cte_sql
+from ..functions.text import tokenize_lines, words_cte_sql, words_from_documents
 from ..sources.catalog import load_table
 
 
@@ -33,14 +33,7 @@ def wordcount_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped word count with a second grouping key — exercises the
     same plan shape with a compound shuffle key."""
     docs = load_table(spark, sf_dir, "documents", spread=True).select("lang", "text")
-    lines = docs.filter(F.col("text").isNotNull() & (F.col("text") != ""))
-    tokens = lines.select(
-        "lang", F.explode(F.split("text", " ")).alias("token")
-    )
-    from ..functions.text import MAX_WORD_LEN, normalize_word
-
-    words = tokens.select("lang", normalize_word(F.col("token")).alias("word"))
-    words = words.filter((F.col("word") != "") & (F.length("word") <= MAX_WORD_LEN))
+    words = words_from_documents(docs, "lang")
     return words.groupBy("lang", "word").agg(F.count("*").alias("cnt"))
 
 
@@ -126,15 +119,7 @@ def vocab_overlap_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True).select(
         "lang", "text"
     )
-    lines = docs.filter(F.col("text").isNotNull() & (F.col("text") != ""))
-    tokens = lines.select(
-        "lang", F.explode(F.split("text", " ")).alias("token")
-    )
-    from ..functions.text import MAX_WORD_LEN, normalize_word
-
-    words = tokens.select(
-        "lang", normalize_word(F.col("token")).alias("word")
-    ).filter((F.col("word") != "") & (F.length("word") <= MAX_WORD_LEN))
+    words = words_from_documents(docs, "lang")
     # cached: each vocab frame feeds the INTERSECT and both EXCEPTs;
     # uncached, the tokenize scan re-ran per set operand (12 parquet
     # scans / 30 Exchanges in the r13 plan audit). Zipf-bounded.

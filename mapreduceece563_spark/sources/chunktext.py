@@ -341,7 +341,7 @@ def chunktext_pruned_count(spark, sf_dir: str):
     from the deterministic doc_id % N_CHUNKS assignment."""
     from pyspark.sql import functions as F
 
-    from ..operators.dedup import words_array
+    from ..functions.text import normalized_words_array
 
     register_chunktext(spark)
     src = chunked_corpus_dir(sf_dir)
@@ -355,7 +355,7 @@ def chunktext_pruned_count(spark, sf_dir: str):
         F.lit(PRUNED_CHUNK).cast("long").alias("chunk_id"),
         F.count("*").alias("n_lines"),
         F.coalesce(
-            F.sum(F.size(words_array(F.col("text")))), F.lit(0)
+            F.sum(F.size(normalized_words_array(F.col("text")))), F.lit(0)
         ).cast("long").alias("n_words"),
     )
 

@@ -122,7 +122,8 @@ class ReplayOrder:
 def _partial_files(partials_dir: str) -> list[str]:
     """Parquet part files under batch_id=* — empty when the stream
     completed without a single foreachBatch invocation (empty input
-    under availableNow), in which case there is nothing to read."""
+    under availableNow), in which case there is nothing to read. Read
+    this list, not a ``batch_id=*`` glob (whose metadata probe fails)."""
     import glob
 
     return glob.glob(os.path.join(partials_dir, "batch_id=*", "*.parquet"))
@@ -238,13 +239,14 @@ def streaming_wordcount_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The checkpoint is consumed; the memoized chunk spill stays for
     # reuse and only the partials back the (lazy) result.
     shutil.rmtree(ckpt, ignore_errors=True)
-    if not _partial_files(partials_dir):
+    files = _partial_files(partials_dir)
+    if not files:
         # Empty corpus: availableNow can finish without one
         # foreachBatch call — honor the zero-row contract instead of
         # raising path-not-found on the never-written partials.
         shutil.rmtree(work, ignore_errors=True)
         return spark.createDataFrame([], "word STRING, cnt BIGINT")
-    partials = spark.read.parquet(os.path.join(partials_dir, "batch_id=*"))
+    partials = spark.read.parquet(*files)
     return partials.groupBy("word").agg(F.sum("cnt").alias("cnt"))
 
 
@@ -291,12 +293,13 @@ def streaming_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .shared_drain import drain_event_streams
 
     partials_dir = drain_event_streams(spark, sf_dir)["dedup"]
-    if not _partial_files(partials_dir):
+    files = _partial_files(partials_dir)
+    if not files:
         # Empty events table: no micro-batch ever fired — honor the
         # zero-row contract (commit f0e3754) instead of raising on
         # the never-written partials dir.
         return spark.createDataFrame([], "event_type STRING, n_events BIGINT")
-    partials = spark.read.parquet(os.path.join(partials_dir, "batch_id=*"))
+    partials = spark.read.parquet(*files)
     return partials.groupBy("event_type").agg(
         F.sum("n").cast("long").alias("n_events")
     )

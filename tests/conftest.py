@@ -94,3 +94,20 @@ def assert_frames_match(spark_df, duck_rel, ctx=""):
     )
     for i, (a, b) in enumerate(zip(sset, dset)):
         assert a == b, f"{ctx}: first row mismatch at {i}: spark={a} duck={b}"
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Report the 15 slowest test modules by summed call time (setup
+    and teardown excluded), so the suite's time budget shows which
+    modules dominate. Reporting only: no test is skipped or reordered."""
+    totals: dict[str, float] = {}
+    for reports in terminalreporter.stats.values():
+        for rep in reports:
+            if getattr(rep, "when", None) == "call":
+                module = rep.nodeid.split("::", 1)[0]
+                totals[module] = totals.get(module, 0.0) + rep.duration
+    if not totals:
+        return
+    terminalreporter.write_sep("=", "15 slowest modules (summed call time)")
+    for module, secs in sorted(totals.items(), key=lambda kv: -kv[1])[:15]:
+        terminalreporter.write_line(f"{secs:9.1f}s  {module}")

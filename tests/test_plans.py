@@ -409,12 +409,11 @@ def test_orc_roundtrip_predicate_pushed(spark):
 
 
 def test_wordcount_normalize_evaluates_once(spark):
-    """Round-5 regression pin: the tokenize chain must keep
-    normalization inside array lambdas (one transform holding the
-    regex = 2 plan-string occurrences, condition + branch of the
-    rule-3 CASE) and must never let a Filter node carry the regex —
-    the scalar chain's pushed survivor predicates re-inlined the
-    normalize expression 2-3x per token (~25% of the 13 MB wall)."""
+    """Round-5 regression pin: the normalize regex must appear at most
+    twice in the plan (the line-level form has it once, inside the
+    explode's generator input) and must never ride on a Filter node —
+    a per-token scalar chain's pushed survivor predicates re-inlined
+    the normalize expression 2-3x per token (~25% of the 13 MB wall)."""
     plan = plan_string(Q["wordcount"](spark, SF_DIR), "formatted")
     assert plan.count("regexp_replace") <= 2, plan.count("regexp_replace")
     for block in plan.split("\n\n"):

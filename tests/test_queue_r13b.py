@@ -73,12 +73,12 @@ def test_chao1_python_model(spark):
     """Recompute V/f1/f2/Chao1 from the raw word counts (the same
     normalize pipeline, via the tokenizer the repo already tests)."""
     from mapreduceece563_spark.operators import corpus as cp
-    from mapreduceece563_spark.operators.dedup import words_array
+    from mapreduceece563_spark.functions.text import normalized_words_array
     from mapreduceece563_spark.sources.catalog import load_table
 
     tok = (
         load_table(spark, SF_DIR, "documents")
-        .select("source", F.explode(words_array(F.col("text"))).alias("w"))
+        .select("source", F.explode(normalized_words_array(F.col("text"))).alias("w"))
         .collect()
     )
     counts: dict[str, dict[str, int]] = {}
@@ -197,12 +197,12 @@ def test_g2_keyness_python_model(spark):
     """Recompute the winning G^2 scores from raw (source, word)
     counts with the identical quantized-ln recipe."""
     from mapreduceece563_spark.operators import ngrams as ng
-    from mapreduceece563_spark.operators.dedup import words_array
+    from mapreduceece563_spark.functions.text import normalized_words_array
     from mapreduceece563_spark.sources.catalog import load_table
 
     tok = (
         load_table(spark, SF_DIR, "documents")
-        .select("source", F.explode(words_array(F.col("text"))).alias("w"))
+        .select("source", F.explode(normalized_words_array(F.col("text"))).alias("w"))
         .collect()
     )
     sw: dict[tuple[str, str], int] = {}

@@ -32,12 +32,12 @@ def test_simpson_python_model(spark):
     from pyspark.sql import functions as F
 
     from mapreduceece563_spark.operators import corpus as cp
-    from mapreduceece563_spark.operators.dedup import words_array
+    from mapreduceece563_spark.functions.text import normalized_words_array
     from mapreduceece563_spark.sources.catalog import load_table
 
     rows = (
         load_table(spark, SF_DIR, "documents")
-        .select("source", words_array(F.col("text")).alias("w"))
+        .select("source", normalized_words_array(F.col("text")).alias("w"))
         .collect()
     )
     by_src: dict = {}
