@@ -446,9 +446,10 @@ def main() -> None:
     # Warmup is UNTIMED, so batch entries warm CONCURRENTLY (6 threads
     # — Spark schedules the jobs; py4j releases the GIL) to keep the
     # whole bench inside the driver's wall-clock envelope as the
-    # registry grows. Streaming entries stay SEQUENTIAL: the shared
-    # drain memos are check-then-act caches, and two threads racing
-    # the same pool would double-write its fixtures.
+    # registry grows. Streaming entries stay SEQUENTIAL, as they are
+    # timed later: the drain memos are single-flight (cachemgr.
+    # per_session), so concurrency would be safe, but a sequential
+    # warmup keeps the bench's timing unchanged.
     import concurrent.futures as _cf
 
     qs_all = queries()
@@ -543,10 +544,9 @@ def main() -> None:
             except BaseException as e:  # noqa: BLE001
                 errs.append(e)
 
-        # hold ONE shuffle.partitions pin around the whole two-thread
-        # block (ADVICE r12): the helpers see the pin and skip their
-        # own save/set/restore, so no thread can capture the other's
-        # transient "8" as prev or flip the conf mid-start
+        # the drain runner's shuffle.partitions pin is reference
+        # counted: the first pool to start sets it, the last to finish
+        # restores it
         threads = [
             threading.Thread(target=_run, args=(f,))
             for f in (
@@ -554,11 +554,10 @@ def main() -> None:
                 shared_drain.drain_round7_streams,
             )
         ]
-        with shared_drain.pin_shuffle_partitions(spark):
-            for th in threads:
-                th.start()
-            for th in threads:
-                th.join()
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
         if errs:
             raise errs[0]
         drain_passes.append(round(time.perf_counter() - t0, 3))

@@ -1,4 +1,4 @@
-"""The one shared-stage layer: every DataFrame cache and memo lives here.
+"""The one memo layer: every cache and memo in the package lives here.
 
 Spark's SQL cache registry (``CacheManager``) is PLAN-KEYED: ``df.cache()``
 registers the frame's canonicalized plan, and any later query — the
@@ -7,8 +7,8 @@ subtree — gets the materialized data substituted by
 ``lookupCachedData``. The registry grows per DISTINCT PLAN, not per
 call, so it is the accounting; nothing here keeps a second list.
 
-Two rules, and no DataFrame cache or module-level DataFrame dict
-anywhere else in the package:
+Two rules, and no cache, memo or module-level dict keyed by
+application anywhere else in the package:
 
 - ``stage(df)`` for a per-call, multiply-referenced frame. Pass 2 of
   the bench re-caches the identical plan and hits pass 1's entry, and
@@ -17,18 +17,28 @@ anywhere else in the package:
   entry's stages at the next entry's build regressed the steady-state
   registry total 241 -> 276 s: the reuse is the point, so stages live
   until an explicit release.
-- ``@per_session`` for a cross-entry INTERMEDIATE of ``(spark,
-  sf_dir)`` (shingle hashes, term frequencies, the co-occurrence edge
-  list): built once per (application, function, sf_dir) and handed
+- ``@per_session`` for anything built once per application and handed
   to every consumer, as the reference engine builds each intermediate
-  once. Never a registered entry's result. At cluster scale each is a
-  table a pipeline writes once and reads per consumer.
+  once: cross-entry DataFrame intermediates (shingle hashes, term
+  frequencies), written layouts and replay fixtures (paths), drained
+  streaming sinks (paths), and the catalog's per-table schema and
+  narrowness verdicts. Never a registered entry's result.
 
-``release_session_caches()`` drops both. It is for cold measurements
-and test teardown only: a release after the bench warmup was tried in
-r14 and reverted (bench.py records why), because the warmup's sf0.001
-entries never match a timed build and the async uncache storm
-destabilized the first timed passes.
+Three lifetimes, from longest to shortest:
+
+- **release**: ``release_session_caches()`` clears the SQL cache
+  registry and the whole memo, paths included, so a cold measurement
+  is fully cold. It is for cold runs and test teardown only: a release
+  after the bench warmup was tried in r14 and reverted (bench.py
+  records why), because the warmup's sf0.001 entries never match a
+  timed build and the async uncache storm destabilized the first
+  timed passes.
+- **forget**: ``forget(*builds)`` drops only those builds' entries.
+  ``streaming.shared_drain.reset()`` forgets the drains, so the next
+  request re-drains while the replay fixtures it reads stay written.
+- **memo**: everything else lives for the application; an entry of
+  any other application is evicted on the next insert (pytest starts
+  many sessions, and their entries died with them).
 """
 
 from __future__ import annotations
@@ -43,10 +53,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 T = TypeVar("T")
 
-# (applicationId, build function, sf_dir) -> its result. Entries of
-# any other application are dropped on insert (pytest creates many
-# sessions; their caches died with them).
-_MEMO: dict[tuple[str, Callable, str], Any] = {}
+# (applicationId, build function, *args) -> its result, and one lock
+# per key so a build runs once however many threads ask for it.
+_MEMO: dict[tuple, Any] = {}
+_KEY_LOCKS: dict[tuple, threading.Lock] = {}
 _LOCK = threading.Lock()
 
 
@@ -57,40 +67,54 @@ def stage(df: DataFrame) -> DataFrame:
     return df.cache()
 
 
-def per_session(
-    build: Callable[[SparkSession, str], T]
-) -> Callable[[SparkSession, str], T]:
-    """Memoize ``build(spark, sf_dir)`` per (application, sf_dir).
+def per_session(build: Callable[..., T]) -> Callable[..., T]:
+    """Memoize ``build(spark, *args)`` per (application, *args).
 
-    The build runs outside the lock and the first stored result wins,
-    so concurrent first callers (the bench's warmup threads) all get
-    the same object; a losing duplicate costs only its plan build,
-    because its staged frames hit the winner's plan-keyed cache
-    entries. The decorator never caches: build functions stage()
-    what they materialize."""
+    Single-flight: the build runs under its key's lock, so concurrent
+    first callers wait for one build and all get its object (two
+    threads never both write one overwrite layout — the r13 race),
+    while different keys build concurrently. A build that raises
+    stores nothing. The decorator never caches a DataFrame: build
+    functions stage() what they materialize."""
 
     @functools.wraps(build)
-    def memoized(spark: SparkSession, sf_dir: str) -> T:
+    def memoized(spark: SparkSession, *args: Any) -> T:
         app = spark.sparkContext.applicationId
-        key = (app, build, sf_dir)
+        key = (app, build, *args)
         with _LOCK:
             if key in _MEMO:
                 return _MEMO[key]
-        value = build(spark, sf_dir)
-        with _LOCK:
-            for stale in [k for k in _MEMO if k[0] != app]:
-                del _MEMO[stale]
-            return _MEMO.setdefault(key, value)
+            lock = _KEY_LOCKS.setdefault(key, threading.Lock())
+        with lock:
+            with _LOCK:
+                if key in _MEMO:
+                    return _MEMO[key]
+            value = build(spark, *args)
+            with _LOCK:
+                for memo in (_MEMO, _KEY_LOCKS):
+                    for stale in [k for k in memo if k[0] != app]:
+                        del memo[stale]
+                _MEMO[key] = value
+            return value
 
     return memoized
 
 
+def forget(*builds: Callable) -> None:
+    """Drop every memoized result of these ``@per_session`` builds, in
+    every application; the next call rebuilds."""
+    targets = {getattr(b, "__wrapped__", b) for b in builds}
+    with _LOCK:
+        for key in [k for k in _MEMO if k[1] in targets]:
+            del _MEMO[key]
+
+
 def release_session_caches() -> int:
-    """Clear the active session's SQL cache registry and the
-    per_session memo. Returns the number of cached RDDs released.
-    Path-valued fixture memos (written parquet layouts) are untouched:
-    they are disk state and stay valid for the session. Never raises:
-    with no live session there is nothing cached to release."""
+    """Clear the active session's SQL cache registry and the whole
+    per_session memo, written paths included (the next call rewrites
+    them). Returns the number of cached RDDs released. For cold
+    measurements and test teardown only. Never raises: with no live
+    session there is nothing cached to release."""
     with _LOCK:
         _MEMO.clear()
     try:

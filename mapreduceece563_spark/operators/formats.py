@@ -48,12 +48,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cachemgr import per_session
 from ..sources.catalog import load_table
 from .relational import _cents, _cents_sql
-
-# (applicationId, sf_dir, kind) -> scratch path already written
-_FMT_CACHE: dict[tuple[str, str, str], str] = {}
-
 
 def _scratch(spark: SparkSession, sf_dir: str, kind: str) -> str:
     app = spark.sparkContext.applicationId
@@ -61,10 +58,8 @@ def _scratch(spark: SparkSession, sf_dir: str, kind: str) -> str:
     return os.path.join(tempfile.gettempdir(), "spark_graft_fmt", tag, kind)
 
 
+@per_session
 def _csv_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, "csv")
-    if key in _FMT_CACHE:
-        return _FMT_CACHE[key]
     path = _scratch(spark, sf_dir, "csv")
     (
         load_table(spark, sf_dir, "part")
@@ -73,7 +68,6 @@ def _csv_dir(spark: SparkSession, sf_dir: str) -> str:
         .options(header=True, sep="|")
         .csv(path)
     )
-    _FMT_CACHE[key] = path
     return path
 
 
@@ -114,10 +108,8 @@ FROM part GROUP BY p_brand
 """
 
 
+@per_session
 def _jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, "jsonl")
-    if key in _FMT_CACHE:
-        return _FMT_CACHE[key]
     path = _scratch(spark, sf_dir, "jsonl")
     (
         load_table(spark, sf_dir, "events")
@@ -126,7 +118,6 @@ def _jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
         .option("timestampFormat", JSON_TS_FMT)
         .json(path)
     )
-    _FMT_CACHE[key] = path
     return path
 
 
@@ -185,10 +176,8 @@ FROM events GROUP BY event_type
 """
 
 
+@per_session
 def _evolved_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, "evolve")
-    if key in _FMT_CACHE:
-        return _FMT_CACHE[key]
     path = _scratch(spark, sf_dir, "evolve")
     docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "n_chars")
@@ -197,7 +186,6 @@ def _evolved_dir(spark: SparkSession, sf_dir: str) -> str:
     )
     old.write.mode("overwrite").parquet(os.path.join(path, "batch=1"))
     new.write.mode("overwrite").parquet(os.path.join(path, "batch=2"))
-    _FMT_CACHE[key] = path
     return path
 
 
@@ -270,10 +258,8 @@ FROM parsed GROUP BY event_type
 """
 
 
+@per_session
 def _orc_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, "orc")
-    if key in _FMT_CACHE:
-        return _FMT_CACHE[key]
     path = _scratch(spark, sf_dir, "orc")
     (
         load_table(spark, sf_dir, "supplier")
@@ -281,7 +267,6 @@ def _orc_dir(spark: SparkSession, sf_dir: str) -> str:
         .write.mode("overwrite")
         .orc(path)
     )
-    _FMT_CACHE[key] = path
     return path
 
 
@@ -321,14 +306,12 @@ FROM supplier WHERE s_acctbal > 0 GROUP BY s_nationkey
 BINARYFILE_MAX_DOC = 64  # docs materialized as individual files
 
 
+@per_session
 def _binary_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize one UTF-8 text file per document (doc_id < 64)
     under doc_id=<k>/ dirs, once per (session, sf) — the on-disk shape
     of a raw multimodal landing zone (one object per asset) before
     compaction into parquet."""
-    key = (spark.sparkContext.applicationId, sf_dir, "binfiles")
-    if key in _FMT_CACHE:
-        return _FMT_CACHE[key]
     path = _scratch(spark, sf_dir, "binfiles")
     (
         load_table(spark, sf_dir, "documents")
@@ -346,7 +329,6 @@ def _binary_dir(spark: SparkSession, sf_dir: str) -> str:
         .partitionBy("doc_id")
         .text(path)
     )
-    _FMT_CACHE[key] = path
     return path
 
 
@@ -400,10 +382,8 @@ WHERE doc_id < {BINARYFILE_MAX_DOC} AND text IS NOT NULL
 # --- XML round-trip (Spark 4 native XML source) -------------------------
 
 
+@per_session
 def _xml_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, "xml")
-    if key in _FMT_CACHE:
-        return _FMT_CACHE[key]
     path = _scratch(spark, sf_dir, "xml")
     (
         load_table(spark, sf_dir, "supplier")
@@ -414,7 +394,6 @@ def _xml_dir(spark: SparkSession, sf_dir: str) -> str:
         .option("rowTag", "supplier")
         .save(path)
     )
-    _FMT_CACHE[key] = path
     return path
 
 

@@ -948,23 +948,12 @@ FROM diff GROUP BY change_type
 
 IVM_CUTOFF = "1997-01-01"  # rows at/after this date are "the delta"
 
-# (appId, sf_dir) -> path of the materialized base aggregate
-_IVM_VIEW_CACHE: dict[tuple[str, str], str] = {}
-
-
-def reset_ivm() -> None:
-    _IVM_VIEW_CACHE.clear()
-
-
+@per_session
 def _ivm_base_view(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the pre-cutoff monthly aggregate ONCE per
     (application, sf_dir) — the stored view an incremental refresh
     maintains. Subsequent refreshes read THIS parquet, never the
     base fact rows."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVM_VIEW_CACHE.get(key)
-    if hit is not None:
-        return hit
     import os
     import tempfile
 
@@ -983,7 +972,6 @@ def _ivm_base_view(spark: SparkSession, sf_dir: str) -> str:
         )
     )
     base.write.mode("overwrite").parquet(path)
-    _IVM_VIEW_CACHE[key] = path
     return path
 
 

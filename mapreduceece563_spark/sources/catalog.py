@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..cachemgr import per_session
+
 TABLES = (
     "region",
     "nation",
@@ -23,26 +25,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-# (appId, sf_dir, name) -> raw parquet read schema (DDL string). The
-# expensive part of spark.read.parquet is the footer schema inference
-# over py4j (~0.1 s per table per query build, ~0.5 s of the q9 bench
-# number was five of these) — so cache ONLY the schema and rebuild a
-# fresh DataFrame per call. Handing every caller the identical
-# DataFrame object (rounds 4-5) pinned the file index at first load
-# (same-session rewrites served stale data) and turned independent
-# loads into same-object self-joins that only worked through Spark's
-# DeduplicateRelations (ADVICE r5, medium). Keyed by applicationId so
-# fresh test sessions re-infer.
-_SCHEMA_CACHE: dict[tuple[str, str, str], str] = {}
-
-
-def invalidate_table_cache() -> None:
-    """Drop every cached schema and narrowness verdict (call after
-    rewriting a table's parquet in place within one session)."""
-    _SCHEMA_CACHE.clear()
-    _NARROW_CACHE.clear()
 
 
 def load_table(
@@ -64,12 +46,6 @@ def load_table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    app = spark.sparkContext.applicationId
-    # evict entries from other (stopped) applications so dead-JVM keys
-    # don't accumulate for the process lifetime (pytest creates many
-    # sessions)
-    for stale in [k for k in _SCHEMA_CACHE if k[0] != app]:
-        del _SCHEMA_CACHE[stale]
     if name == "events":
         df = _load_events(spark, sf_dir)
     else:
@@ -77,12 +53,6 @@ def load_table(
     if spread and _scan_is_narrow(spark, sf_dir, name):
         df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
-
-
-# (appId, sf_dir, name) -> whether the table's scan needs the spread
-# (fewer estimated splits than cores). One os.stat pass per table per
-# session — the same metadata a real catalog serves without listing.
-_NARROW_CACHE: dict[tuple[str, str, str], bool] = {}
 
 
 def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
@@ -101,6 +71,7 @@ def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
         return default
 
 
+@per_session
 def _scan_is_narrow(spark: SparkSession, sf_dir: str, name: str) -> bool:
     """True when the parquet scan will plan FEWER splits than the
     session's default parallelism, i.e. a downstream CPU-heavy map
@@ -110,12 +81,9 @@ def _scan_is_narrow(spark: SparkSession, sf_dir: str, name: str) -> bool:
     only matters for many-tiny-file layouts, where the estimate is
     already >= cores or the spread is moot). Fails closed: a path this
     cannot list (a URI, a missing table) is never narrow, so an
-    unknown scan never gets a full-scan shuffle."""
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, name)
-    cached = _NARROW_CACHE.get(key)
-    if cached is not None:
-        return cached
+    unknown scan never gets a full-scan shuffle. Memoized per
+    (application, sf_dir, table): one os.stat pass per table per
+    session, the metadata a real catalog serves without listing."""
     import glob as _glob
     import os as _os
 
@@ -134,23 +102,29 @@ def _scan_is_narrow(spark: SparkSession, sf_dir: str, name: str) -> bool:
             splits += max(1, -(-_os.path.getsize(f) // max_bytes))
         except OSError:
             splits += 1
-    narrow = 0 < splits < spark.sparkContext.defaultParallelism
-    _NARROW_CACHE[key] = narrow
-    return narrow
+    return 0 < splits < spark.sparkContext.defaultParallelism
+
+
+@per_session
+def _table_ddl(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """The table's raw parquet read schema, as DDL. The expensive part
+    of spark.read.parquet is the footer schema inference over py4j
+    (~0.1 s per table per query build; ~0.5 s of the q9 bench number
+    was five of these), so only the schema is memoized and every
+    caller gets a fresh DataFrame. Handing every caller the identical
+    DataFrame object (rounds 4-5) pinned the file index at first load
+    (same-session rewrites served stale data) and turned independent
+    loads into same-object self-joins that only worked through Spark's
+    DeduplicateRelations (ADVICE r5, medium)."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet").schema.toDDL()
 
 
 def _read_with_cached_schema(
     spark: SparkSession, sf_dir: str, name: str
 ) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, name)
-    path = f"{sf_dir}/{name}.parquet"
-    ddl = _SCHEMA_CACHE.get(key)
-    if ddl is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema.toDDL()
-        return df
-    return spark.read.schema(ddl).parquet(path)
+    return spark.read.schema(_table_ddl(spark, sf_dir, name)).parquet(
+        f"{sf_dir}/{name}.parquet"
+    )
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -41,6 +41,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..cachemgr import per_session
+
 CHUNK_PREFIX = "chunk_"
 CHUNK_SUFFIX = ".txt"
 
@@ -683,12 +685,61 @@ ChunkTextDataSource.streamReader = _stream_reader
 ChunkTextDataSource.simpleStreamReader = _simple_stream_reader
 
 
-# (appId, sf_dir) -> partials dir of the streaming run
-_STREAM_WC_CACHE: dict[tuple[str, str], str] = {}
+def _start_stream_wc(spark, sf_dir: str):
+    """The shared_drain.drain start contract for a custom source: it
+    has no availableNow trigger, so the start also drives the query
+    until its offset stops advancing (processAllAvailable, the
+    multi-batch drain) and stops it; the runner's await then returns
+    at once."""
+    from pyspark.sql import functions as F
+
+    from ..functions.text import tokenize_lines
+    from ..streaming.wordcount_stream import _fresh_workdir
+
+    src = chunked_corpus_dir(sf_dir)
+    work = _fresh_workdir("chunktext_stream", sf_dir)
+    sink = os.path.join(work, "partials")
+    os.makedirs(sink, exist_ok=True)
+    lines = (
+        spark.readStream.format("chunktext")
+        .option("path", src)
+        # the rate-limited driver-prefetch reader: its read(start) is
+        # handed the checkpointed offset by the engine, so bounded
+        # 2-chunk batches (the reference's task-farm doling, >1
+        # micro-batch per drain) are restart-safe. The default
+        # distributed reader takes everything available per trigger
+        # (restart-correct by pure-function offsets; see
+        # ChunkTextStreamReader).
+        .option("reader", "driver-prefetch")
+        .load()
+        .select(F.col("text"))
+    )
+    counts = tokenize_lines(lines).groupBy("word").agg(
+        F.count("*").alias("cnt")
+    )
+
+    def sink_fn(batch_df, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(sink, f"batch_id={batch_id}")
+        )
+
+    q = (
+        counts.writeStream.foreachBatch(sink_fn)
+        .outputMode("update")
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    return q, work, sink
 
 
-def reset_stream_wc() -> None:
-    _STREAM_WC_CACHE.clear()
+@per_session
+def _stream_wc_drain(spark, sf_dir: str) -> str:
+    from ..streaming.shared_drain import drain
+
+    (sink,) = drain(spark, sf_dir, _start_stream_wc)
+    return sink
 
 
 def streaming_wordcount_via_datasource(spark, sf_dir: str):
@@ -699,65 +750,12 @@ def streaming_wordcount_via_datasource(spark, sf_dir: str):
     replay), the same tokenize chain, update-mode counts persisted
     per batch_id and reduced last-writer-wins — hash-equal to the
     batch WORDCOUNT_SQL oracle."""
-    import shutil
-
     from pyspark.sql import functions as F
 
-    from ..functions.text import tokenize_lines
-    from ..streaming.wordcount_stream import _fresh_workdir, _partial_files
+    from ..streaming.wordcount_stream import _partial_files
 
     register_chunktext(spark)
-    src = chunked_corpus_dir(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sink = _STREAM_WC_CACHE.get(key)
-    if sink is None:
-        work = _fresh_workdir("chunktext_stream", sf_dir)
-        sink = os.path.join(work, "partials")
-        os.makedirs(sink, exist_ok=True)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            lines = (
-                spark.readStream.format("chunktext")
-                .option("path", src)
-                # the rate-limited driver-prefetch reader: its
-                # read(start) is handed the checkpointed offset by the
-                # engine, so bounded 2-chunk batches (the reference's
-                # task-farm doling, >1 micro-batch per drain) are
-                # restart-safe. The default distributed reader takes
-                # everything available per trigger (restart-correct by
-                # pure-function offsets; see ChunkTextStreamReader).
-                .option("reader", "driver-prefetch")
-                .load()
-                .select(F.col("text"))
-            )
-            counts = tokenize_lines(lines).groupBy("word").agg(
-                F.count("*").alias("cnt")
-            )
-
-            def sink_fn(batch_df, batch_id: int) -> None:
-                batch_df.write.mode("overwrite").parquet(
-                    os.path.join(sink, f"batch_id={batch_id}")
-                )
-
-            q = (
-                counts.writeStream.foreachBatch(sink_fn)
-                .outputMode("update")
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
-                .start()
-            )
-            # processAllAvailable drives micro-batches until the
-            # source's offset stops advancing — the multi-batch drain
-            # for a custom source (availableNow is file-source only).
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-        _STREAM_WC_CACHE[key] = sink
+    sink = _stream_wc_drain(spark, sf_dir)
     if not _partial_files(sink):
         return spark.createDataFrame([], "word STRING, cnt BIGINT")
     emissions = spark.read.parquet(sink)

@@ -28,49 +28,27 @@ registration; see SURVEY.md "Round-7 queue").
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.relational import _cents
 from ..sources.catalog import load_table
-from .wordcount_stream import _fresh_workdir, spill_chunks
-
-# (applicationId, sf_dir) -> updates dir of the finished drain
-_ENRICH_CACHE: dict[tuple[str, str], str] = {}
-
-
-def reset_enrich() -> None:
-    _ENRICH_CACHE.clear()
+from .wordcount_stream import _fresh_workdir, event_chunks, start_batches
 
 
 def _start_enrich(spark: SparkSession, sf_dir: str):
-    """Build the fixture and START the enrichment query without
-    awaiting it — the shared round-7 drain (shared_drain.
-    drain_round7_streams) starts the four round-7 streaming queries
-    concurrently so one registry pass pays max(drain), the same
-    consolidation the r4 event entries already ride. Returns
-    (query, work dir, sink dir)."""
+    """Start the enrichment query over the shared events chunk layout
+    (the shared_drain.drain start contract; the round-7 pool starts
+    it together with its siblings)."""
     work = _fresh_workdir("enrich", sf_dir)
-    sink = os.path.join(work, "updates")
-    os.makedirs(sink, exist_ok=True)
-
-    # identical fixture tag as the shared event drain: whichever entry
-    # runs first in a pass writes the chunk layout once
-    ev = load_table(spark, sf_dir, "events").select(
-        "ts", "event_type", "user_id", "value"
-    )
-    src = spill_chunks(ev, sf_dir, "events_shared")
-
     dim = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-
     stream = (
         spark.readStream.schema("user_id BIGINT, value DOUBLE")
         .option("maxFilesPerTrigger", 4)
-        .parquet(src)
+        .parquet(event_chunks(spark, sf_dir))
     )
     enriched = stream.join(
         F.broadcast(dim), stream["user_id"] == dim["c_custkey"]
@@ -81,32 +59,7 @@ def _start_enrich(spark: SparkSession, sf_dir: str):
         F.count("*").alias("n_events"),
         F.sum(_cents(F.col("value"))).alias("value_cents"),
     )
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    q = (
-        agg.writeStream.foreachBatch(sink_batch)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, work, sink
-
-
-def _enrich_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _ENRICH_CACHE.get(key)
-    if hit is not None:
-        return hit
-    q, work, sink = _start_enrich(spark, sf_dir)
-    q.awaitTermination()
-    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _ENRICH_CACHE[key] = sink
-    return sink
+    return start_batches(agg, work, os.path.join(work, "updates"))
 
 
 def streaming_static_enrichment(
@@ -115,8 +68,7 @@ def streaming_static_enrichment(
     from .shared_drain import drain_round7_streams
     from .wordcount_stream import _partial_files
 
-    drain_round7_streams(spark, sf_dir)
-    updates_dir = _enrich_drain(spark, sf_dir)
+    updates_dir = drain_round7_streams(spark, sf_dir)["enrich"]
     if not _partial_files(updates_dir):
         return spark.createDataFrame(
             [], "segment STRING, n_events BIGINT, value_cents BIGINT"

@@ -33,26 +33,21 @@ the foreachBatch sink appends matches idempotently by batch_id.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cachemgr import per_session
 from ..sources.catalog import load_table
+from .wordcount_stream import (
+    ReplayOrder,
+    _fresh_workdir,
+    _partial_files,
+    start_batches,
+)
 
 JOIN_WINDOW_MIN = 30
 N_JOIN_CHUNKS = 4
-
-# (appId, sf_dir) -> matched-pairs partials dir
-_JOIN_CACHE: dict[tuple[str, str], str] = {}
-# (appId, sf_dir) -> (purchases dir, views dir). Kept OUT of
-# reset(): the layouts are deterministic input fixtures, so a bench
-# pass re-times the drain, not the chunk writes.
-_JOIN_SRC_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
-def reset_join_stream() -> None:
-    _JOIN_CACHE.clear()
 
 
 def _write_time_ordered_chunks(
@@ -64,8 +59,6 @@ def _write_time_ordered_chunks(
     docstring), so each chunk's mtime is assigned explicitly and
     strictly increasing — never left to filesystem timestamp
     resolution, where sub-second writes can tie and reorder."""
-    from .wordcount_stream import ReplayOrder
-
     order = ReplayOrder(dest)
     span = max(1, (hi - lo) + 1)
     us = F.unix_micros(F.col("ts"))
@@ -81,116 +74,85 @@ def _write_time_ordered_chunks(
         order.mark(dest)
 
 
-def _start_join(spark: SparkSession, sf_dir: str):
-    """Fixture + START (no await, no conf fiddling — the caller pins
-    spark.sql.shuffle.partitions around the start, because a
-    streaming query captures its state partitioning when it starts).
-    Returns (query, work dir, sink dir). See shared_drain.
-    drain_round7_streams for the concurrent-drain consolidation."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    from .wordcount_stream import _fresh_workdir
-
-    work = _fresh_workdir("stream_join", sf_dir)
-    sink = os.path.join(work, "pairs")
-    os.makedirs(sink, exist_ok=True)
-
-    srcs = _JOIN_SRC_CACHE.get(key)
-    if srcs is None:
-        src_work = _fresh_workdir("stream_join_src", sf_dir)
-        p_src = os.path.join(src_work, "purchases")
-        v_src = os.path.join(src_work, "views")
-        for d in (p_src, v_src):
-            os.makedirs(d, exist_ok=True)
-        ev = load_table(spark, sf_dir, "events").select(
-            "user_id", "ts", "event_id", "event_type"
-        )
-        # Harness setup: shared chunk boundaries for BOTH sources,
-        # from one 1-row min/max action over the whole stream.
-        bounds = ev.agg(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        ).first()
-        if bounds["lo"] is not None:
+def _purchase_view_chunks(
+    spark: SparkSession, sf_dir: str, src_work: str
+) -> tuple[str, str]:
+    """Write purchases and views as time-ordered chunks over SHARED
+    chunk boundaries (one 1-row min/max action over the whole
+    stream) under ``src_work``; returns (purchases dir, views dir)."""
+    p_src = os.path.join(src_work, "purchases")
+    v_src = os.path.join(src_work, "views")
+    for d in (p_src, v_src):
+        os.makedirs(d, exist_ok=True)
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "event_type"
+    )
+    bounds = ev.agg(
+        F.unix_micros(F.min("ts")).alias("lo"),
+        F.unix_micros(F.max("ts")).alias("hi"),
+    ).first()
+    if bounds["lo"] is not None:
+        for kind, dest in (("purchase", p_src), ("view", v_src)):
             _write_time_ordered_chunks(
-                ev.filter(F.col("event_type") == "purchase").select(
+                ev.filter(F.col("event_type") == kind).select(
                     "user_id", "ts", "event_id"
                 ),
-                p_src, bounds["lo"], bounds["hi"], N_JOIN_CHUNKS,
+                dest, bounds["lo"], bounds["hi"], N_JOIN_CHUNKS,
             )
-            _write_time_ordered_chunks(
-                ev.filter(F.col("event_type") == "view").select(
-                    "user_id", "ts", "event_id"
-                ),
-                v_src, bounds["lo"], bounds["hi"], N_JOIN_CHUNKS,
-            )
-        _JOIN_SRC_CACHE[key] = (p_src, v_src)
-    else:
-        p_src, v_src = srcs
+    return p_src, v_src
 
-    schema = "user_id BIGINT, ts TIMESTAMP, event_id BIGINT"
-    p = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(p_src)
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("p_event_id"),
-        )
+
+@per_session
+def _join_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """The join's replay fixture. Input data, not part of the drain:
+    reset() keeps it, so a bench pass re-times the drain, not the
+    chunk writes."""
+    return _purchase_view_chunks(
+        spark, sf_dir, _fresh_workdir("stream_join_src", sf_dir)
     )
-    v = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(v_src)
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-            F.col("event_id").alias("v_event_id"),
+
+
+def _interval_join(spark: SparkSession, p_src: str, v_src: str, how: str):
+    """Both replays as streams watermarked 1 hour, purchases joined to
+    the same user's views in the 30 minutes before the purchase:
+    (p_user, p_event_id, v_event_id)."""
+
+    def side(src: str, prefix: str) -> DataFrame:
+        return (
+            spark.readStream.schema(
+                "user_id BIGINT, ts TIMESTAMP, event_id BIGINT"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .withWatermark("ts", "1 hour")
+            .select(
+                F.col("user_id").alias(f"{prefix}_user"),
+                F.col("ts").alias(f"{prefix}_ts"),
+                F.col("event_id").alias(f"{prefix}_event_id"),
+            )
         )
-    )
-    joined = p.join(
-        v,
+
+    return side(p_src, "p").join(
+        side(v_src, "v"),
         (F.col("p_user") == F.col("v_user"))
         & (
             F.col("v_ts")
             >= F.col("p_ts") - F.expr(f"INTERVAL {JOIN_WINDOW_MIN} MINUTES")
         )
         & (F.col("v_ts") <= F.col("p_ts")),
-        "inner",
+        how,
     ).select("p_user", "p_event_id", "v_event_id")
 
-    def sink_fn(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
 
-    q = (
-        joined.writeStream.foreachBatch(sink_fn)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+def _start_join(spark: SparkSession, sf_dir: str):
+    """The inner interval join over the time-ordered replay (the
+    shared_drain.drain start contract; the round-7 pool starts it
+    with its siblings)."""
+    work = _fresh_workdir("stream_join", sf_dir)
+    joined = _interval_join(spark, *_join_src(spark, sf_dir), "inner")
+    return start_batches(
+        joined, work, os.path.join(work, "pairs"), mode="append"
     )
-    return q, work, sink
-
-
-def _join_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _JOIN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q, work, sink = _start_join(spark, sf_dir)
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _JOIN_CACHE[key] = sink
-    return sink
 
 
 def streaming_purchase_view_join(
@@ -201,10 +163,8 @@ def streaming_purchase_view_join(
     (purchase, view-within-30min) pairs and the distinct purchases
     they cover, hash-checked against the identical batch join."""
     from .shared_drain import drain_round7_streams
-    from .wordcount_stream import _partial_files
 
-    drain_round7_streams(spark, sf_dir)
-    sink = _join_drain(spark, sf_dir)
+    sink = drain_round7_streams(spark, sf_dir)["join"]
     if not _partial_files(sink):
         return spark.createDataFrame(
             [],

@@ -37,12 +37,18 @@ the fixture's chunk count is a replay knob, not a data-volume knob.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cachemgr import per_session
 from ..sources.catalog import load_table
+from .wordcount_stream import (
+    ReplayOrder,
+    _fresh_workdir,
+    _partial_files,
+    start_batches,
+)
 
 N_LATE_CHUNKS = 6
 # chunk k (by time range) is written at position index(PERM, k):
@@ -52,110 +58,65 @@ LATE_PERM = (0, 3, 1, 4, 2, 5)
 LATE_DELAY_MS = 2 * 3600 * 1000  # withWatermark("ts", "2 hours")
 HOUR_US = 3600 * 1_000_000
 
-# Pool membership switch: False until the entry REGISTERS (flip in
-# the registration commit) so the shared __drain__ line never pays
-# for a drain no registered entry consumes. The solo _late_drain
-# path works either way.
-POOL_ENABLED = False
 
-# (appId, sf_dir) -> updates dir of the finished drain
-_LATE_CACHE: dict[tuple[str, str], str] = {}
-# (appId, sf_dir) -> src chunk dir; deterministic input layout, kept
-# out of reset() like _SESSION_SRC_CACHE
-_LATE_SRC_CACHE: dict[tuple[str, str], str] = {}
-
-
-def reset_late_stream() -> None:
-    _LATE_CACHE.clear()
+@per_session
+def _late_src(spark: SparkSession, sf_dir: str) -> str:
+    """The out-of-order chunk replay (chunk k written at position
+    index(LATE_PERM, k)). Input data, kept across reset()."""
+    src = os.path.join(_fresh_workdir("late_audit_src", sf_dir), "src")
+    os.makedirs(src, exist_ok=True)
+    ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
+    bounds = ev.agg(
+        F.unix_micros(F.min("ts")).alias("lo"),
+        F.unix_micros(F.max("ts")).alias("hi"),
+    ).first()
+    lo, hi = bounds["lo"], bounds["hi"]
+    order = ReplayOrder(src)
+    if lo is not None:
+        span = max(1, (hi - lo) + 1)
+        us = F.unix_micros(F.col("ts"))
+        for k in LATE_PERM:
+            a = lo + (span * k) // N_LATE_CHUNKS
+            b = lo + (span * (k + 1)) // N_LATE_CHUNKS
+            (
+                ev.filter((us >= a) & (us < b))
+                .coalesce(1)
+                .write.mode("append")
+                .parquet(src)
+            )
+            order.mark(src)
+    return src
 
 
 def _start_late(spark: SparkSession, sf_dir: str):
-    """Fixture + START (no await): the shared_drain.
-    drain_round7_streams pool-member contract. Returns
-    (query, work dir, sink dir)."""
-    from .wordcount_stream import ReplayOrder, _fresh_workdir
-
-    key = (spark.sparkContext.applicationId, sf_dir)
+    """The watermarked hourly count over the out-of-order replay (the
+    shared_drain.drain start contract)."""
     work = _fresh_workdir("late_audit", sf_dir)
-    sink = os.path.join(work, "updates")
-    os.makedirs(sink, exist_ok=True)
-
-    src = _LATE_SRC_CACHE.get(key)
-    if src is None:
-        src = os.path.join(_fresh_workdir("late_audit_src", sf_dir), "src")
-        os.makedirs(src, exist_ok=True)
-        ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
-        bounds = ev.agg(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
-        order = ReplayOrder(src)
-        if lo is not None:
-            span = max(1, (hi - lo) + 1)
-            us = F.unix_micros(F.col("ts"))
-            for k in LATE_PERM:
-                a = lo + (span * k) // N_LATE_CHUNKS
-                b = lo + (span * (k + 1)) // N_LATE_CHUNKS
-                (
-                    ev.filter((us >= a) & (us < b))
-                    .coalesce(1)
-                    .write.mode("append")
-                    .parquet(src)
-                )
-                order.mark(src)
-        _LATE_SRC_CACHE[key] = src
-
     stream = (
         spark.readStream.schema("ts TIMESTAMP, event_type STRING")
         .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        .parquet(_late_src(spark, sf_dir))
     )
     agg = (
         stream.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count("*").alias("n_events"))
     )
-
-    def sink_fn(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select(
-            F.col("window.start").alias("hour"),
-            "event_type",
-            "n_events",
-        ).write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    q = (
-        agg.writeStream.foreachBatch(sink_fn)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        agg,
+        work,
+        os.path.join(work, "updates"),
+        shape=lambda b: b.select(
+            F.col("window.start").alias("hour"), "event_type", "n_events"
+        ),
     )
-    return q, work, sink
 
 
+@per_session
 def _late_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LATE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from .shared_drain import _PARTS_PINNED
+    from .shared_drain import drain
 
-    pinned = _PARTS_PINNED
-    prev_parts = None
-    if not pinned:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q, work, sink = _start_late(spark, sf_dir)
-        q.awaitTermination()
-    finally:
-        if not pinned:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _LATE_CACHE[key] = sink
+    (sink,) = drain(spark, sf_dir, _start_late)
     return sink
 
 
@@ -166,10 +127,6 @@ def streaming_late_data_audit(
     what survives the watermark. The oracle recomputes the engine's
     pinned drop rule (module docstring) arithmetically, so a
     mismatch means the engine's late-data semantics moved."""
-    from .shared_drain import drain_round7_streams
-    from .wordcount_stream import _partial_files
-
-    drain_round7_streams(spark, sf_dir)
     sink = _late_drain(spark, sf_dir)
     if not _partial_files(sink):
         return spark.createDataFrame(

@@ -32,30 +32,23 @@ that no more input exists, converted here into watermark advances.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table
-from .join_stream import JOIN_WINDOW_MIN, N_JOIN_CHUNKS, _write_time_ordered_chunks
+from ..cachemgr import per_session
+from .join_stream import JOIN_WINDOW_MIN, _interval_join, _purchase_view_chunks
+from .wordcount_stream import (
+    ReplayOrder,
+    _fresh_workdir,
+    _partial_files,
+    start_batches,
+)
 
 OUTER_SENTINELS = ("2030-01-01 00:00:00", "2030-01-02 00:00:00")
 
-# (appId, sf_dir) -> joined-rows partials dir
-_OUTER_CACHE: dict[tuple[str, str], str] = {}
-# (appId, sf_dir) -> (purchases dir, views dir); fixture layout, kept
-# out of reset() like the sibling drains
-_OUTER_SRC_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
-def reset_outer_join() -> None:
-    _OUTER_CACHE.clear()
-
 
 def _append_sentinels(spark: SparkSession, dest: str) -> None:
-    from .wordcount_stream import ReplayOrder
-
     order = ReplayOrder(dest)
     for s_ts in OUTER_SENTINELS:
         (
@@ -74,116 +67,26 @@ def _append_sentinels(spark: SparkSession, dest: str) -> None:
         order.mark(dest)
 
 
+@per_session
+def _outer_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """The join's time-ordered replay plus two sentinel files per
+    side. Input data, kept across reset() like the sibling drains'."""
+    p_src, v_src = _purchase_view_chunks(
+        spark, sf_dir, _fresh_workdir("stream_outer_src", sf_dir)
+    )
+    _append_sentinels(spark, p_src)
+    _append_sentinels(spark, v_src)
+    return p_src, v_src
+
+
 def _start_outer_join(spark: SparkSession, sf_dir: str):
-    """Fixture + START (no await, no conf fiddling — caller pins
-    spark.sql.shuffle.partitions around the start). Returns
-    (query, work dir, sink dir). See shared_drain.
-    drain_round7_streams for the concurrent-drain consolidation."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    from .wordcount_stream import _fresh_workdir
-
+    """The LEFT OUTER interval join (the shared_drain.drain start
+    contract; the round-7 pool starts it with its siblings)."""
     work = _fresh_workdir("stream_outer_join", sf_dir)
-    sink = os.path.join(work, "rows")
-    os.makedirs(sink, exist_ok=True)
-
-    srcs = _OUTER_SRC_CACHE.get(key)
-    if srcs is None:
-        src_work = _fresh_workdir("stream_outer_src", sf_dir)
-        p_src = os.path.join(src_work, "purchases")
-        v_src = os.path.join(src_work, "views")
-        for d in (p_src, v_src):
-            os.makedirs(d, exist_ok=True)
-        ev = load_table(spark, sf_dir, "events").select(
-            "user_id", "ts", "event_id", "event_type"
-        )
-        bounds = ev.agg(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        ).first()
-        if bounds["lo"] is not None:
-            _write_time_ordered_chunks(
-                ev.filter(F.col("event_type") == "purchase").select(
-                    "user_id", "ts", "event_id"
-                ),
-                p_src, bounds["lo"], bounds["hi"], N_JOIN_CHUNKS,
-            )
-            _write_time_ordered_chunks(
-                ev.filter(F.col("event_type") == "view").select(
-                    "user_id", "ts", "event_id"
-                ),
-                v_src, bounds["lo"], bounds["hi"], N_JOIN_CHUNKS,
-            )
-        _append_sentinels(spark, p_src)
-        _append_sentinels(spark, v_src)
-        _OUTER_SRC_CACHE[key] = (p_src, v_src)
-    else:
-        p_src, v_src = srcs
-
-    schema = "user_id BIGINT, ts TIMESTAMP, event_id BIGINT"
-    p = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(p_src)
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("p_event_id"),
-        )
+    joined = _interval_join(spark, *_outer_src(spark, sf_dir), "left_outer")
+    return start_batches(
+        joined, work, os.path.join(work, "rows"), mode="append"
     )
-    v = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(v_src)
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-            F.col("event_id").alias("v_event_id"),
-        )
-    )
-    joined = p.join(
-        v,
-        (F.col("p_user") == F.col("v_user"))
-        & (
-            F.col("v_ts")
-            >= F.col("p_ts")
-            - F.expr(f"INTERVAL {JOIN_WINDOW_MIN} MINUTES")
-        )
-        & (F.col("v_ts") <= F.col("p_ts")),
-        "left_outer",
-    ).select("p_user", "p_event_id", "v_event_id")
-
-    def sink_fn(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    q = (
-        joined.writeStream.foreachBatch(sink_fn)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, work, sink
-
-
-def _outer_join_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _OUTER_CACHE.get(key)
-    if hit is not None:
-        return hit
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q, work, sink = _start_outer_join(spark, sf_dir)
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _OUTER_CACHE[key] = sink
-    return sink
 
 
 def streaming_outer_join_attribution(
@@ -194,10 +97,8 @@ def streaming_outer_join_attribution(
     view preceded — the rows only a correct watermark eviction can
     produce (see module docstring). Sentinels filtered here."""
     from .shared_drain import drain_round7_streams
-    from .wordcount_stream import _partial_files
 
-    drain_round7_streams(spark, sf_dir)
-    sink = _outer_join_drain(spark, sf_dir)
+    sink = drain_round7_streams(spark, sf_dir)["outer"]
     if not _partial_files(sink):
         return spark.createDataFrame(
             [],

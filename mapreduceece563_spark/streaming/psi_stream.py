@@ -28,7 +28,6 @@ writes <= |cells| rows. The PSI re-score reads cell frames only.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,14 +40,12 @@ from ..operators.analytics import (
     _psi_from_cells,
 )
 from ..sources.catalog import load_table
-from .wordcount_stream import _fresh_workdir, _partial_files, spill_chunks
-
-# (appId, sf_dir) -> updates dir of the finished drain
-_PSI_CACHE: dict[tuple[str, str], str] = {}
-
-
-def reset_psi_stream() -> None:
-    _PSI_CACHE.clear()
+from .wordcount_stream import (
+    _fresh_workdir,
+    _partial_files,
+    event_chunks,
+    start_batches,
+)
 
 
 def _bin_expr():
@@ -61,24 +58,16 @@ def _bin_expr():
 
 
 def _start_psi(spark: SparkSession, sf_dir: str):
-    """Fixture + START (no await): the current epoch (ts >= KS_SPLIT)
-    streams off the shared events chunk layout; binned counts
-    aggregate in update mode and sink per batch_id. Returns
-    (query, work dir, sink dir)."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "ts", "event_type", "user_id", "value"
-    )
-    src = spill_chunks(ev, sf_dir, "events_shared")
+    """The current epoch (ts >= KS_SPLIT) streams off the shared events
+    chunk layout; binned counts aggregate in update mode and sink per
+    batch_id. The shared_drain.drain start contract."""
     work = _fresh_workdir("psi_monitor", sf_dir)
-    sink = os.path.join(work, "updates")
-    os.makedirs(sink, exist_ok=True)
-
     stream = (
         spark.readStream.schema(
             "ts TIMESTAMP, event_type STRING, value DOUBLE"
         )
         .option("maxFilesPerTrigger", 4)
-        .parquet(src)
+        .parquet(event_chunks(spark, sf_dir))
     )
     cur = (
         stream.filter(F.col("ts") >= F.lit(KS_SPLIT).cast("timestamp"))
@@ -86,32 +75,7 @@ def _start_psi(spark: SparkSession, sf_dir: str):
         .groupBy("event_type", "bin")
         .agg(F.count(F.lit(1)).alias("cur_n"))
     )
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    q = (
-        cur.writeStream.foreachBatch(sink_batch)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, work, sink
-
-
-def _psi_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PSI_CACHE.get(key)
-    if hit is not None:
-        return hit
-    q, work, sink = _start_psi(spark, sf_dir)
-    q.awaitTermination()
-    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _PSI_CACHE[key] = sink
-    return sink
+    return start_batches(cur, work, os.path.join(work, "updates"))
 
 
 def streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,8 +84,7 @@ def streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see module docstring)."""
     from .shared_drain import drain_round7_streams
 
-    drain_round7_streams(spark, sf_dir)
-    sink = _psi_drain(spark, sf_dir)
+    sink = drain_round7_streams(spark, sf_dir)["psi"]
 
     mid = F.lit(KS_SPLIT).cast("timestamp")
     ref = (

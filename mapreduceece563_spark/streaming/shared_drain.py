@@ -1,21 +1,38 @@
-"""One shared multi-micro-batch drain for the three event-based
-streaming entries (VERDICT r3 ask #7).
+"""One runner for every streaming drain, and the two concurrent pools.
 
-streaming_user_profile / streaming_events_hourly / streaming_dedup
-are three DIFFERENT stateful operators (applyInPandasWithState,
-update-mode windowed agg, dropDuplicatesWithinWatermark), so they
-cannot be one streaming query — but nothing forces them to drain the
-source serially. This module starts all three queries CONCURRENTLY
-on the session and awaits them together, so one registry pass pays
-max(drain) instead of sum(drain) (~16 s -> ~7 s per bench pass at
-sf0.1). Each query keeps its own checkpoint, sink dir, and the exact
-operator graph it had as a standalone run — the hard streaming
-signal is unchanged, only the wall-clock overlap is new.
+Every streaming entry reads the sink of a DRAIN: a finite run of a
+real streaming query over a replay fixture, into an idempotent
+per-batch_id sink. ``drain(spark, sf_dir, *starts)`` is the one
+runner. It pins ``spark.sql.shuffle.partitions`` to 8, calls each
+start (which writes or reuses its fixture and starts one query),
+awaits every query, drops their checkpoints and returns each start's
+sink.
 
-The drain is memoized per (application, sf_dir): the first of the
-three entries to run in a pass executes it, the other two find their
-sinks already written. ``reset()`` clears the memo; bench.py calls it
-between passes so every pass re-measures a real drain.
+Shuffle partitions: a streaming query captures its state partitioning
+from the session conf when it starts. The fixture state (users,
+windows, event ids at test SF) doesn't need 32 state-store instances
+per operator per micro-batch; 8 quarters the per-batch checkpoint and
+commit I/O the concurrent queries contend on. The pin is reference
+counted, so concurrent drains (bench.py drains both pools on two
+threads) share one save/set/restore: the first drain saves the conf
+and sets 8, and the last one restores it once every query it started
+has finished. A real deployment sizes this to key cardinality.
+
+Pools: streaming_user_profile / streaming_events_hourly /
+streaming_dedup (the event trio), and the PSI monitor, stream-static
+enrichment, sliding windows, stream-stream join and outer join (the
+round-7 pool), are different operator graphs that cannot be one
+query, but nothing forces their drains to run serially: each pool
+starts its queries together, so a pass pays max(drain) instead of
+sum(drain). Each query keeps its own fixture, checkpoint, sink and
+the operator graph it had as a standalone run. A pool returns
+``{member: sink}`` and each member reads its own sink from it.
+
+Memo: every drain is a ``cachemgr.per_session`` build. ``reset()``
+forgets the builds in ``DRAINS``, so the next request re-drains
+(bench.py and perfbench call it between passes) while the replay
+fixtures the drains read stay written. streaming_wordcount_batch uses
+the runner without a memo and drains on every call.
 """
 
 from __future__ import annotations
@@ -23,221 +40,94 @@ from __future__ import annotations
 import contextlib
 import os
 import shutil
+import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..cachemgr import forget, per_session
 from ..operators.relational import _cents
 from ..sources.catalog import load_table
-from .stateful import running_user_profile
-from .wordcount_stream import _fresh_workdir, spill_chunks
+from ..sources.chunktext import _stream_wc_drain
+from . import (
+    enrich_stream,
+    join_stream,
+    outer_join_stream,
+    psi_stream,
+    windowed_stream,
+)
+from .late_stream import _late_drain
+from .stateful import _tws_drain, running_user_profile
+from .upsert_stream import _upsert_drain
+from .wordcount_stream import _fresh_workdir, event_chunks, spill_chunks, start_batches
 
-# (appId, sf_dir) -> {"profile": dir, "hourly": dir, "dedup": dir}
-_DRAIN_CACHE: dict[tuple[str, str], dict[str, str]] = {}
-
-# True while pin_shuffle_partitions() holds the session conf. The two
-# pool-drain helpers each save/set/restore shuffle.partitions around
-# their query starts; when bench.py runs both helpers in concurrent
-# threads, one helper's finally-restore could flip the conf while the
-# other was still starting queries, and a helper could capture the
-# other's transient "8" as its prev (ADVICE r12). With the pin held
-# the helpers skip their own conf mutation entirely, so there is one
-# save/set/restore for the whole block, on one thread.
-_PARTS_PINNED = False
+_PARTS = "spark.sql.shuffle.partitions"
+_PIN_LOCK = threading.Lock()
+_pin_holders = 0
+_pin_prev: str | None = None
 
 
 @contextlib.contextmanager
-def pin_shuffle_partitions(spark: SparkSession, n: str = "8"):
-    """Pin spark.sql.shuffle.partitions for the duration of the block
-    and mark the pin so nested drain helpers — possibly running on
-    other threads — skip their own save/set/restore."""
-    global _PARTS_PINNED
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
-    _PARTS_PINNED = True
+def _pinned_partitions(spark: SparkSession):
+    global _pin_holders, _pin_prev
+    with _PIN_LOCK:
+        if _pin_holders == 0:
+            _pin_prev = spark.conf.get(_PARTS)
+            spark.conf.set(_PARTS, "8")
+        _pin_holders += 1
     try:
         yield
     finally:
-        _PARTS_PINNED = False
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        with _PIN_LOCK:
+            _pin_holders -= 1
+            if _pin_holders == 0:
+                spark.conf.set(_PARTS, _pin_prev)
 
 
-def reset() -> None:
-    """Forget completed drains (bench.py calls this between passes so
-    each pass times a real concurrent drain, not a sink read-back).
-    Also clears the append-mode session-window drain memo."""
-    _DRAIN_CACHE.clear()
-    from . import join_stream, stateful, windowed_stream
-
-    windowed_stream.reset_session_windows()
-    windowed_stream.reset_sliding_windows()
-    join_stream.reset_join_stream()
-    stateful.reset_tws()
-    from . import enrich_stream, outer_join_stream, upsert_stream
-
-    upsert_stream.reset_upsert()
-    enrich_stream.reset_enrich()
-    outer_join_stream.reset_outer_join()
-    from . import psi_stream
-
-    psi_stream.reset_psi_stream()
-    from . import late_stream
-
-    late_stream.reset_late_stream()
-    from ..sources import chunktext
-
-    chunktext.reset_stream_wc()
-
-
-def drain_round7_streams(spark: SparkSession, sf_dir: str) -> None:
-    """Concurrent drain for the four round-7 streaming entries
-    (VERDICT r9 ask #3): streaming_static_enrichment,
-    streaming_sliding_windows, streaming_purchase_view_join, and
-    streaming_outer_join_attribution each used to pay a solo drain
-    (2.0 + 2.3 + 5.0 + 6.9 s per bench pass at sf0.1). Like
-    drain_event_streams, they are four different operator graphs that
-    cannot be one streaming query — but nothing forces their drains
-    to run serially. Start whichever are still undrained
-    CONCURRENTLY and await them together, populating each module's
-    own memo, so a registry pass pays max(drain) instead of
-    sum(drain). Each query keeps the exact operator graph, fixture,
-    checkpoint, and sink it had as a standalone run — the hard
-    streaming signal is unchanged, only the wall-clock overlap is
-    new. reset() clears the same memos it always did, so bench.py
-    still re-measures a real (now concurrent) drain per pass."""
-    from . import (
-        enrich_stream,
-        join_stream,
-        outer_join_stream,
-        psi_stream,
-        windowed_stream,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    starters = []
-    # the pool grew in round 10: the PSI monitor drains concurrently
-    # with the four round-7 entries (same memo/reset discipline)
-    if key not in psi_stream._PSI_CACHE:
-        starters.append((psi_stream._start_psi, psi_stream._PSI_CACHE))
-    if key not in enrich_stream._ENRICH_CACHE:
-        starters.append((enrich_stream._start_enrich, enrich_stream._ENRICH_CACHE))
-    if key not in windowed_stream._SLIDING_CACHE:
-        starters.append(
-            (windowed_stream._start_sliding, windowed_stream._SLIDING_CACHE)
-        )
-    if key not in join_stream._JOIN_CACHE:
-        starters.append((join_stream._start_join, join_stream._JOIN_CACHE))
-    if key not in outer_join_stream._OUTER_CACHE:
-        starters.append(
-            (outer_join_stream._start_outer_join, outer_join_stream._OUTER_CACHE)
-        )
-    # the round-14 late-data audit joins the pool (round 13): its
-    # ~5 s 6-micro-batch drain overlaps the siblings instead of
-    # paying a solo line — gated off until the entry registers so
-    # the __drain__ line never pays for an unconsumed drain
-    from . import late_stream
-
-    if late_stream.POOL_ENABLED and key not in late_stream._LATE_CACHE:
-        starters.append((late_stream._start_late, late_stream._LATE_CACHE))
-    if not starters:
-        return
-
-    # Same state-partitioning note as drain_event_streams: pin 8
-    # around the starts (a query captures its state partitioning when
-    # it starts), restore only after every drain finished. Skipped
-    # when bench.py already holds pin_shuffle_partitions() around the
-    # whole concurrent-drain block (see _PARTS_PINNED).
-    pinned = _PARTS_PINNED
-    prev_parts = None
-    if not pinned:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-    started = []
-    try:
-        for start, cache in starters:
-            started.append((start(spark, sf_dir), cache))
-        for (q, _work, _sink), _cache in started:
+def drain(spark: SparkSession, sf_dir: str, *starts) -> list:
+    """Run each ``start(spark, sf_dir) -> (query, work dir, sink)``
+    under the partition pin, await every query, drop each
+    ``work/ckpt`` and return the sinks in order. The pin is released
+    only after the awaits: flipping the conf back any earlier could
+    race a query still planning its first micro-batch."""
+    with _pinned_partitions(spark):
+        started = [start(spark, sf_dir) for start in starts]
+        for q, _, _ in started:
             q.awaitTermination()
-    finally:
-        if not pinned:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    for (q, work, sink), cache in started:
+    for _, work, _ in started:
         shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-        cache[key] = sink
+    return [sink for _, _, sink in started]
 
 
-def drain_event_streams(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DRAIN_CACHE.get(key)
-    if hit is not None:
-        return hit
+# --- the event trio ------------------------------------------------------
 
-    work = _fresh_workdir("shared_events", sf_dir)
-    dirs = {
-        name: os.path.join(work, name)
-        for name in ("profile", "hourly", "dedup")
-    }
-    for d in dirs.values():
-        os.makedirs(d, exist_ok=True)
 
-    # A streaming query pins its state partitioning from the session
-    # conf at START. The fixture state (users/windows/event ids at
-    # test SF) doesn't need 32 state-store instances per operator per
-    # micro-batch — 8 quarters the per-batch checkpoint+commit I/O the
-    # three concurrent queries contend on. Restored right after start;
-    # a real deployment sizes this to key cardinality instead.
-    pinned = _PARTS_PINNED
-    prev_parts = None
-    if not pinned:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "ts", "event_type", "user_id", "value"
-    )
-    src = spill_chunks(ev, sf_dir, "events_shared")
-    dd = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type"
-    )
-    src_doubled = spill_chunks(dd.union(dd), sf_dir, "ev_doubled")
-
-    queries = []
-
-    # 1) custom stateful per-user profile (applyInPandasWithState),
-    #    update-mode emissions tagged by batch_id.
-    profile_stream = (
+def _start_profile(spark: SparkSession, sf_dir: str):
+    """Custom stateful per-user profile (applyInPandasWithState),
+    update-mode emissions tagged by batch_id."""
+    work = _fresh_workdir("events_profile", sf_dir)
+    stream = (
         spark.readStream.schema("user_id BIGINT, value DOUBLE")
         .option("maxFilesPerTrigger", 2)
-        .parquet(src)
+        .parquet(event_chunks(spark, sf_dir))
     )
-    profile = running_user_profile(profile_stream)
-    prof_dir = dirs["profile"]
-
-    def prof_sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(prof_dir, f"batch_id={batch_id}")
-        )
-
-    queries.append(
-        profile.writeStream.foreachBatch(prof_sink)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work, "ckpt_profile"))
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        running_user_profile(stream), work, os.path.join(work, "profile")
     )
 
-    # 2) update-mode hourly windowed aggregation.
-    hourly_stream = (
+
+def _start_hourly(spark: SparkSession, sf_dir: str):
+    """Update-mode hourly windowed aggregation."""
+    work = _fresh_workdir("events_hourly", sf_dir)
+    stream = (
         spark.readStream.schema(
             "ts TIMESTAMP, event_type STRING, value DOUBLE"
         )
         .option("maxFilesPerTrigger", 2)
-        .parquet(src)
+        .parquet(event_chunks(spark, sf_dir))
     )
     hourly = (
-        hourly_stream.groupBy(
-            F.window("ts", "1 hour").alias("win"), "event_type"
-        )
+        stream.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(_cents(F.col("value"))).alias("_vc"),
@@ -249,60 +139,76 @@ def drain_event_streams(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             (F.col("_vc") / 100.0).alias("value_sum"),
         )
     )
-    hourly_dir = dirs["hourly"]
+    return start_batches(hourly, work, os.path.join(work, "hourly"))
 
-    def hourly_sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(hourly_dir, f"batch_id={batch_id}")
-        )
 
-    queries.append(
-        hourly.writeStream.foreachBatch(hourly_sink)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work, "ckpt_hourly"))
-        .trigger(availableNow=True)
-        .start()
+def _start_dedup(spark: SparkSession, sf_dir: str):
+    """Watermarked exact dedup of the deliberately doubled stream."""
+    work = _fresh_workdir("events_dedup", sf_dir)
+    dd = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "event_type"
     )
-
-    # 3) watermarked exact dedup of the deliberately doubled stream.
-    dedup_stream = (
+    stream = (
         spark.readStream.schema(
             "event_id BIGINT, ts TIMESTAMP, event_type STRING"
         )
         .option("maxFilesPerTrigger", 2)
-        .parquet(src_doubled)
+        .parquet(spill_chunks(dd.union(dd), sf_dir, "ev_doubled"))
     )
-    deduped = dedup_stream.withWatermark(
+    deduped = stream.withWatermark(
         "ts", "3650 days"
     ).dropDuplicatesWithinWatermark(["event_id"])
-    dedup_dir = dirs["dedup"]
-
-    def dedup_sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("event_type")
-            .agg(F.count("*").alias("n"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(dedup_dir, f"batch_id={batch_id}"))
-        )
-
-    queries.append(
-        deduped.writeStream.foreachBatch(dedup_sink)
-        .option("checkpointLocation", os.path.join(work, "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        deduped,
+        work,
+        os.path.join(work, "dedup"),
+        mode="append",
+        shape=lambda b: b.groupBy("event_type").agg(F.count("*").alias("n")),
     )
 
-    try:
-        for q in queries:
-            q.awaitTermination()
-    finally:
-        # restore only after the drain: a query plans its first
-        # micro-batch lazily, so flipping the conf back any earlier
-        # could race the state-partitioning capture
-        if not pinned:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    for name in ("profile", "hourly", "dedup"):
-        shutil.rmtree(os.path.join(work, f"ckpt_{name}"), ignore_errors=True)
 
-    _DRAIN_CACHE[key] = dirs
-    return dirs
+@per_session
+def drain_event_streams(spark: SparkSession, sf_dir: str) -> dict[str, str]:
+    """The event trio's concurrent drain: {member: sink dir}."""
+    sinks = drain(spark, sf_dir, _start_profile, _start_hourly, _start_dedup)
+    return dict(zip(("profile", "hourly", "dedup"), sinks))
+
+
+# --- the round-7 pool -----------------------------------------------------
+
+_ROUND7 = {
+    "psi": psi_stream._start_psi,
+    "enrich": enrich_stream._start_enrich,
+    "sliding": windowed_stream._start_sliding,
+    "join": join_stream._start_join,
+    "outer": outer_join_stream._start_outer_join,
+}
+
+
+@per_session
+def drain_round7_streams(spark: SparkSession, sf_dir: str) -> dict[str, str]:
+    """The round-7 pool's concurrent drain: {member: sink dir}. Each
+    solo drain used to cost 2.0-6.9 s per bench pass at sf0.1; together
+    a pass pays the slowest (the outer join's 10-batch drain)."""
+    return dict(zip(_ROUND7, drain(spark, sf_dir, *_ROUND7.values())))
+
+
+# The drains reset() forgets. The replay fixtures they read (the spill
+# layouts and the time-ordered chunk sources) are per_session builds
+# that stay written.
+DRAINS = (
+    drain_event_streams,
+    drain_round7_streams,
+    _tws_drain,
+    _upsert_drain,
+    windowed_stream._session_window_drain,
+    _late_drain,
+    _stream_wc_drain,
+)
+
+
+def reset() -> None:
+    """Forget completed drains (bench.py and perfbench call this
+    between passes so each pass times a real drain, not a sink
+    read-back)."""
+    forget(*DRAINS)

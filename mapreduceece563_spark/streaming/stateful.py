@@ -18,6 +18,7 @@ cents in state, divides once at emission.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -25,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..cachemgr import per_session
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -160,7 +163,7 @@ FROM events GROUP BY user_id
 # forbidden). vendor/protoshim.py provides a minimal clean-room
 # implementation; it is installed at import of tws_processor.py — the
 # module that defines the processor — so the side effect is scoped to
-# the TWS code path: the driver imports it lazily in _tws_drain, and
+# the TWS code path: the driver imports it lazily in _start_tws, and
 # workers import it when unpickling TwsUserProfile, both before
 # pyspark's deferred StateMessage_pb2 imports run. A real protobuf
 # installation, if ever present, wins. Exercised end-to-end by
@@ -172,95 +175,61 @@ FROM events GROUP BY user_id
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 
 
-# (appId, sf_dir) -> emissions dir
-_TWS_CACHE: dict[tuple[str, str], str] = {}
-
-
-def reset_tws() -> None:
-    _TWS_CACHE.clear()
-
-
-def _tws_drain(spark, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TWS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import os
-    import shutil
-
+def _start_tws(spark, sf_dir: str):
+    """The transformWithStateInPandas query (the shared_drain.drain
+    start contract)."""
     from ..sources.catalog import load_table
-    from .wordcount_stream import _fresh_workdir, spill_chunks
+    from .tws_processor import TwsUserProfile
+    from .wordcount_stream import _fresh_workdir, spill_chunks, start_batches
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "value"
     )
-    src = spill_chunks(ev, sf_dir, "tws_events")
     work = _fresh_workdir("tws_profile", sf_dir)
-    sink = os.path.join(work, "emissions")
-    os.makedirs(sink, exist_ok=True)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
+    stream = (
+        spark.readStream.schema(
+            "user_id BIGINT, event_type STRING, value DOUBLE"
+        )
+        # 8 chunks / 4 per trigger = 2 micro-batches: the minimum
+        # that still exercises a real cross-batch state carry (the
+        # signal this entry exists for). Each extra batch re-pays
+        # the state-server spin-up + per-partition RocksDB commit
+        # (~1.5-2 s here), which dominates this operator's cost —
+        # measured 4->2 batches: 11.1 s -> ~6 s at sf0.1. State
+        # partitions stay at 8: halving them SLOWED the drain
+        # (per-key Python state work loses parallelism).
+        .option("maxFilesPerTrigger", 4)
+        .parquet(spill_chunks(ev, sf_dir, "tws_events"))
     )
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    out = stream.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=TwsUserProfile(),
+        outputStructType=(
+            "user_id BIGINT, n_events BIGINT, value_sum DOUBLE,"
+            " n_types BIGINT"
+        ),
+        outputMode="Update",
+        timeMode="None",
+    )
+    return start_batches(out, work, os.path.join(work, "emissions"))
+
+
+@per_session
+def _tws_drain(spark, sf_dir: str) -> str:
+    from .shared_drain import drain
+
     # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-    )
+    prev_provider = spark.conf.get(_PROVIDER_KEY, None)
+    spark.conf.set(_PROVIDER_KEY, ROCKSDB_PROVIDER)
     try:
-        stream = (
-            spark.readStream.schema(
-                "user_id BIGINT, event_type STRING, value DOUBLE"
-            )
-            # 8 chunks / 4 per trigger = 2 micro-batches: the minimum
-            # that still exercises a real cross-batch state carry (the
-            # signal this entry exists for). Each extra batch re-pays
-            # the state-server spin-up + per-partition RocksDB commit
-            # (~1.5-2 s here), which dominates this operator's cost —
-            # measured 4->2 batches: 11.1 s -> ~6 s at sf0.1. State
-            # partitions stay at 8: halving them SLOWED the drain
-            # (per-key Python state work loses parallelism).
-            .option("maxFilesPerTrigger", 4)
-            .parquet(src)
-        )
-        from .tws_processor import TwsUserProfile
-
-        out = stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=TwsUserProfile(),
-            outputStructType=(
-                "user_id BIGINT, n_events BIGINT, value_sum DOUBLE,"
-                " n_types BIGINT"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-
-        def sink_fn(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(sink, f"batch_id={batch_id}")
-            )
-
-        q = (
-            out.writeStream.foreachBatch(sink_fn)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        (sink,) = drain(spark, sf_dir, _start_tws)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+            spark.conf.unset(_PROVIDER_KEY)
         else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _TWS_CACHE[key] = sink
+            spark.conf.set(_PROVIDER_KEY, prev_provider)
     return sink
 
 

@@ -31,25 +31,18 @@ part that transfers.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cachemgr import per_session
 from ..sources.catalog import load_table
 from .wordcount_stream import _fresh_workdir, spill_chunks
-
-# (applicationId, sf_dir) -> target table directory
-_UPSERT_CACHE: dict[tuple[str, str], str] = {}
 
 TARGET_SCHEMA = (
     "user_id BIGINT, n_events BIGINT, value_cents BIGINT,"
     " last_ts TIMESTAMP, last_type STRING, last_cents BIGINT"
 )
-
-
-def reset_upsert() -> None:
-    _UPSERT_CACHE.clear()
 
 
 def _read_target(spark: SparkSession, root: str) -> DataFrame | None:
@@ -132,11 +125,9 @@ def _merge_batch(
         fh.write(str(batch_id))
 
 
-def _upsert_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _UPSERT_CACHE.get(key)
-    if hit is not None:
-        return hit
+def _start_upsert(spark: SparkSession, sf_dir: str):
+    """The MERGE drain (the shared_drain.drain start contract): the
+    sink is the target table root, not a batch_id-keyed dir."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
@@ -144,34 +135,31 @@ def _upsert_drain(spark: SparkSession, sf_dir: str) -> str:
     work = _fresh_workdir("merge_upsert", sf_dir)
     root = os.path.join(work, "target")
     os.makedirs(root, exist_ok=True)
+    stream = (
+        spark.readStream.schema(
+            "user_id BIGINT, ts TIMESTAMP, event_type STRING,"
+            " value DOUBLE"
+        )
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+    )
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda df, bid: _merge_batch(spark, root, df, bid)
+        )
+        .outputMode("update")
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    return q, work, root
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = (
-            spark.readStream.schema(
-                "user_id BIGINT, ts TIMESTAMP, event_type STRING,"
-                " value DOUBLE"
-            )
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: _merge_batch(spark, root, df, bid)
-            )
-            .outputMode("update")
-            .option(
-                "checkpointLocation", os.path.join(work, "ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _UPSERT_CACHE[key] = root
+
+@per_session
+def _upsert_drain(spark: SparkSession, sf_dir: str) -> str:
+    from .shared_drain import drain
+
+    (root,) = drain(spark, sf_dir, _start_upsert)
     return root
 
 

@@ -33,8 +33,20 @@ result is bit-identical to the batch plan's.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..cachemgr import per_session
+from ..sources.catalog import load_table
+from .wordcount_stream import (
+    ReplayOrder,
+    _fresh_workdir,
+    _partial_files,
+    event_chunks,
+    start_batches,
+)
 
 
 def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,7 +56,6 @@ def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drain just overlaps the sibling profile/dedup streams so one
     # registry pass pays max(drain) instead of sum(drain).
     from .shared_drain import drain_event_streams
-    from .wordcount_stream import _partial_files
 
     updates_dir = drain_event_streams(spark, sf_dir)["hourly"]
     if not _partial_files(updates_dir):
@@ -87,120 +98,87 @@ def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # construction and must equal the batch session_window oracle.
 # ----------------------------------------------------------------------
 
-import os
-import shutil
-
-from ..sources.catalog import load_table
-
-# (appId, sf_dir) -> finalized-sessions partials dir
-_SESSION_WIN_CACHE: dict[tuple[str, str], str] = {}
-# (appId, sf_dir) -> src chunk dir. Kept OUT of reset(): the layout
-# is deterministic input data (like spill_chunks), so a bench pass
-# re-times the DRAIN, not the fixture write (~6 s of scans at sf0.1).
-_SESSION_SRC_CACHE: dict[tuple[str, str], str] = {}
-
 SESSION_SENTINELS = ("2030-01-01 00:00:00", "2030-01-02 00:00:00")
 N_SESSION_CHUNKS = 4
 
 
-def reset_session_windows() -> None:
-    _SESSION_WIN_CACHE.clear()
-
-
-def _session_window_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SESSION_WIN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from .wordcount_stream import _fresh_workdir
-
-    work = _fresh_workdir("session_win", sf_dir)
-    sink = os.path.join(work, "sessions")
-    os.makedirs(sink, exist_ok=True)
-
-    src = _SESSION_SRC_CACHE.get(key)
-    if src is None:
-        src = os.path.join(_fresh_workdir("session_win_src", sf_dir), "src")
-        os.makedirs(src, exist_ok=True)
-        ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-        # Harness setup (not a query path): one 1-row min/max action
-        # to derive the chunk boundaries for the time-ordered replay.
-        bounds = ev.agg(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
-        # Replay order is load-bearing for the watermark (see
-        # join_stream's module docstring); assign strictly increasing
-        # mtimes per chunk so coarse filesystem timestamps can't tie
-        # and reorder the sequential writes.
-        from .wordcount_stream import ReplayOrder
-
-        order = ReplayOrder(src)
-        if lo is not None:
-            span = max(1, (hi - lo) + 1)
-            us = F.unix_micros(F.col("ts"))
-            for k in range(N_SESSION_CHUNKS):
-                a = lo + (span * k) // N_SESSION_CHUNKS
-                b = lo + (span * (k + 1)) // N_SESSION_CHUNKS
-                (
-                    ev.filter((us >= a) & (us < b))
-                    .coalesce(1)
-                    .write.mode("append")
-                    .parquet(src)
-                )
-                order.mark(src)
-        for s_ts in SESSION_SENTINELS:
+@per_session
+def _session_src(spark: SparkSession, sf_dir: str) -> str:
+    """The time-ordered chunk replay of (user_id, ts) plus the two
+    sentinel files. Input data, not part of the drain: reset() keeps
+    it, so a bench pass re-times the drain, not this write (~6 s of
+    scans at sf0.1)."""
+    src = os.path.join(_fresh_workdir("session_win_src", sf_dir), "src")
+    os.makedirs(src, exist_ok=True)
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
+    # Harness setup (not a query path): one 1-row min/max action
+    # to derive the chunk boundaries for the time-ordered replay.
+    bounds = ev.agg(
+        F.unix_micros(F.min("ts")).alias("lo"),
+        F.unix_micros(F.max("ts")).alias("hi"),
+    ).first()
+    lo, hi = bounds["lo"], bounds["hi"]
+    # Replay order is load-bearing for the watermark (see
+    # join_stream's module docstring); assign strictly increasing
+    # mtimes per chunk so coarse filesystem timestamps can't tie
+    # and reorder the sequential writes.
+    order = ReplayOrder(src)
+    if lo is not None:
+        span = max(1, (hi - lo) + 1)
+        us = F.unix_micros(F.col("ts"))
+        for k in range(N_SESSION_CHUNKS):
+            a = lo + (span * k) // N_SESSION_CHUNKS
+            b = lo + (span * (k + 1)) // N_SESSION_CHUNKS
             (
-                spark.createDataFrame(
-                    [(-1, s_ts)], "user_id BIGINT, ts STRING"
-                )
-                .select(
-                    "user_id", F.col("ts").cast("timestamp").alias("ts")
-                )
+                ev.filter((us >= a) & (us < b))
                 .coalesce(1)
                 .write.mode("append")
                 .parquet(src)
             )
             order.mark(src)
-        _SESSION_SRC_CACHE[key] = src
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = (
-            spark.readStream.schema("user_id BIGINT, ts TIMESTAMP")
-            .option("maxFilesPerTrigger", 1)
+    for s_ts in SESSION_SENTINELS:
+        (
+            spark.createDataFrame([(-1, s_ts)], "user_id BIGINT, ts STRING")
+            .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
+            .coalesce(1)
+            .write.mode("append")
             .parquet(src)
         )
-        sess = (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-            .agg(F.count("*").alias("n_events"))
-        )
+        order.mark(src)
+    return src
 
-        def sink_fn(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.select(
-                "user_id",
-                F.col("session_window.start").alias("session_start"),
-                F.col("session_window.end").alias("session_end"),
-                "n_events",
-            ).write.mode("overwrite").parquet(
-                os.path.join(sink, f"batch_id={batch_id}")
-            )
 
-        q = (
-            sess.writeStream.foreachBatch(sink_fn)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _SESSION_WIN_CACHE[key] = sink
+def _start_session_windows(spark: SparkSession, sf_dir: str):
+    work = _fresh_workdir("session_win", sf_dir)
+    stream = (
+        spark.readStream.schema("user_id BIGINT, ts TIMESTAMP")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(_session_src(spark, sf_dir))
+    )
+    sess = (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        .agg(F.count("*").alias("n_events"))
+    )
+    return start_batches(
+        sess,
+        work,
+        os.path.join(work, "sessions"),
+        mode="append",
+        shape=lambda b: b.select(
+            "user_id",
+            F.col("session_window.start").alias("session_start"),
+            F.col("session_window.end").alias("session_end"),
+            "n_events",
+        ),
+    )
+
+
+@per_session
+def _session_window_drain(spark: SparkSession, sf_dir: str) -> str:
+    from .shared_drain import drain
+
+    (sink,) = drain(spark, sf_dir, _start_session_windows)
     return sink
 
 
@@ -208,10 +186,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows computed by an actual append-mode
     Structured Streaming run (native ``session_window`` + watermark,
     sessions emitted exactly once on finalization), oracle-checked
-    against the batch lag/cumsum SQL. See the drain docstring for why
-    this is lossless."""
-    from .wordcount_stream import _partial_files
-
+    against the batch lag/cumsum SQL. See the section comment above
+    for why this is lossless."""
     sink = _session_window_drain(spark, sf_dir)
     if not _partial_files(sink):
         return spark.createDataFrame(
@@ -243,35 +219,16 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SLIDE_US = 7200 * 1_000_000  # 2 hours in microseconds
 
-# (appId, sf_dir) -> updates dir of the finished drain
-_SLIDING_CACHE: dict[tuple[str, str], str] = {}
-
-
-def reset_sliding_windows() -> None:
-    _SLIDING_CACHE.clear()
-
-
 def _start_sliding(spark: SparkSession, sf_dir: str):
-    """Fixture + START (no await): see shared_drain.
-    drain_round7_streams. Returns (query, work dir, sink dir)."""
-    from .wordcount_stream import _fresh_workdir, spill_chunks
-
-    # identical fixture tag as the shared event drain: whichever
-    # event-stream entry runs first in a pass writes the layout once
-    ev = load_table(spark, sf_dir, "events").select(
-        "ts", "event_type", "user_id", "value"
-    )
-    src = spill_chunks(ev, sf_dir, "events_shared")
+    """The sliding-window query over the shared events chunk layout
+    (the shared_drain.drain start contract)."""
     work = _fresh_workdir("sliding_win", sf_dir)
-    sink = os.path.join(work, "updates")
-    os.makedirs(sink, exist_ok=True)
-
     stream = (
         spark.readStream.schema(
             "ts TIMESTAMP, event_type STRING, value DOUBLE"
         )
         .option("maxFilesPerTrigger", 4)
-        .parquet(src)
+        .parquet(event_chunks(spark, sf_dir))
     )
     agg = (
         stream.groupBy(
@@ -290,42 +247,15 @@ def _start_sliding(spark: SparkSession, sf_dir: str):
             "value_cents",
         )
     )
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    q = (
-        agg.writeStream.foreachBatch(sink_batch)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, work, sink
-
-
-def _sliding_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SLIDING_CACHE.get(key)
-    if hit is not None:
-        return hit
-    q, work, sink = _start_sliding(spark, sf_dir)
-    q.awaitTermination()
-    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _SLIDING_CACHE[key] = sink
-    return sink
+    return start_batches(agg, work, os.path.join(work, "updates"))
 
 
 def streaming_sliding_windows(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from .shared_drain import drain_round7_streams
-    from .wordcount_stream import _partial_files
 
-    drain_round7_streams(spark, sf_dir)
-    updates_dir = _sliding_drain(spark, sf_dir)
+    updates_dir = drain_round7_streams(spark, sf_dir)["sliding"]
     if not _partial_files(updates_dir):
         return spark.createDataFrame(
             [],

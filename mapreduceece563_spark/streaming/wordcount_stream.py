@@ -22,6 +22,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,6 +78,45 @@ def spill_chunks(df: DataFrame, sf_dir: str, tag: str, n_files: int = 8) -> str:
     df.repartition(n_files).write.mode("overwrite").parquet(path)
     _SPILL_CACHE[key] = path
     return path
+
+
+def event_chunks(spark: SparkSession, sf_dir: str) -> str:
+    """The events spill most event streams replay (one layout shared
+    by the event trio and the PSI, enrichment and sliding drains)."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "ts", "event_type", "user_id", "value"
+    )
+    return spill_chunks(ev, sf_dir, "events_shared")
+
+
+def start_batches(
+    stream: DataFrame,
+    work: str,
+    sink: str,
+    mode: str = "update",
+    shape: Callable[[DataFrame], DataFrame] = lambda b: b,
+):
+    """Start ``stream`` as an availableNow query whose foreachBatch
+    writes each micro-batch, through ``shape``, to
+    ``sink/batch_id=<id>`` — overwrite mode, so a replayed batch
+    rewrites its own directory and never double-counts — checkpointed
+    under ``work/ckpt``. Returns the ``shared_drain.drain`` start
+    contract (query, work dir, sink dir)."""
+    os.makedirs(sink, exist_ok=True)
+
+    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
+        shape(batch_df).write.mode("overwrite").parquet(
+            os.path.join(sink, f"batch_id={batch_id}")
+        )
+
+    q = (
+        stream.writeStream.foreachBatch(sink_batch)
+        .outputMode(mode)
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    return q, work, sink
 
 
 class ReplayOrder:
@@ -170,6 +210,27 @@ def windowed_event_counts(
     )
 
 
+def _start_wc(spark: SparkSession, sf_dir: str):
+    """Spill documents.text into 8 chunk files and start the drain:
+    2 files per trigger (>1 micro-batch per run), each micro-batch's
+    words partial-aggregated into a batch_id-keyed dir (per-batch
+    partials are small, so the drain's 8 shuffle partitions suffice)."""
+    work = _fresh_workdir("wc", sf_dir)
+    docs = load_table(spark, sf_dir, "documents").select("text")
+    stream = (
+        spark.readStream.schema("text STRING")
+        .option("maxFilesPerTrigger", 2)
+        .parquet(spill_chunks(docs, sf_dir, "wc_docs"))
+    )
+    return start_batches(
+        tokenize_lines(stream),
+        work,
+        os.path.join(work, "partials"),
+        mode="append",
+        shape=lambda b: b.groupBy("word").agg(F.count("*").alias("cnt")),
+    )
+
+
 def streaming_wordcount_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word count computed through an ACTUAL Structured Streaming run —
     the registry's hard signal for SURVEY.md §2.9 (previously the
@@ -197,54 +258,15 @@ def streaming_wordcount_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation — SCALE.md); the final merge is an ordinary
     vocabulary-keyed aggregation.
     """
-    work = _fresh_workdir("wc", sf_dir)
-    partials_dir = os.path.join(work, "partials")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(partials_dir, exist_ok=True)
+    from .shared_drain import drain
 
-    docs = load_table(spark, sf_dir, "documents").select("text")
-    src = spill_chunks(docs, sf_dir, "wc_docs")
-
-    stream = (
-        spark.readStream.schema("text STRING")
-        .option("maxFilesPerTrigger", 2)  # >1 micro-batch per run
-        .parquet(src)
-    )
-    words = tokenize_lines(stream)
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("word")
-            .agg(F.count("*").alias("cnt"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(partials_dir, f"batch_id={batch_id}"))
-        )
-
-    # Per-batch partials are small (one trigger = 2 chunk files), so
-    # the in-drain combiner doesn't need the session's 32 shuffle
-    # partitions — 8 cuts per-micro-batch task overhead (same sizing
-    # note as shared_drain).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            words.writeStream.foreachBatch(sink_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # The checkpoint is consumed; the memoized chunk spill stays for
-    # reuse and only the partials back the (lazy) result.
-    shutil.rmtree(ckpt, ignore_errors=True)
+    (partials_dir,) = drain(spark, sf_dir, _start_wc)
     files = _partial_files(partials_dir)
     if not files:
         # Empty corpus: availableNow can finish without one
         # foreachBatch call — honor the zero-row contract instead of
         # raising path-not-found on the never-written partials.
-        shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(os.path.dirname(partials_dir), ignore_errors=True)
         return spark.createDataFrame([], "word STRING, cnt BIGINT")
     partials = spark.read.parquet(*files)
     return partials.groupBy("word").agg(F.sum("cnt").alias("cnt"))

@@ -53,10 +53,12 @@ def test_streaming_psi_ran_multiple_batches(spark):
     import os
 
     from mapreduceece563_spark.streaming import psi_stream as ps
+    from mapreduceece563_spark.streaming.shared_drain import (
+        drain_round7_streams,
+    )
 
     ps.streaming_psi_monitor(spark, SF_DIR).collect()
-    key = (spark.sparkContext.applicationId, SF_DIR)
-    sink = ps._PSI_CACHE[key]
+    sink = drain_round7_streams(spark, SF_DIR)["psi"]
     batches = [d for d in os.listdir(sink) if d.startswith("batch_id=")]
     assert len(batches) >= 2, batches
 

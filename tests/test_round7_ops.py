@@ -232,9 +232,10 @@ def test_streaming_sliding_windows_matches_batch_oracle(spark, duck):
     from tests.conftest import assert_frames_match
 
     from mapreduceece563_spark.sources.catalog import load_table
+    from mapreduceece563_spark.streaming import shared_drain
     from mapreduceece563_spark.streaming import windowed_stream as ws
 
-    ws.reset_sliding_windows()
+    shared_drain.reset()
     sdf = ws.streaming_sliding_windows(spark, SF_DIR)
     assert_frames_match(
         sdf,
@@ -393,8 +394,9 @@ def test_streaming_outer_join_matches_batch_left_join(spark, duck):
 
     from mapreduceece563_spark.sources.catalog import load_table
     from mapreduceece563_spark.streaming import outer_join_stream as oj
+    from mapreduceece563_spark.streaming import shared_drain
 
-    oj.reset_outer_join()
+    shared_drain.reset()
     sdf = oj.streaming_outer_join_attribution(spark, SF_DIR)
     assert_frames_match(
         sdf,

@@ -54,17 +54,15 @@ def test_bloom_join_prune_matches_oracle_no_false_negatives(spark, duck):
 def test_ivm_refresh_equals_full_recompute(spark, duck):
     from mapreduceece563_spark.operators import mining as mn
 
-    mn.reset_ivm()
     sdf = mn.ivm_incremental_agg(spark, SF_DIR)
     assert_frames_match(
         sdf, duck.execute(mn.IVM_INCREMENTAL_SQL), ctx="ivm_incremental_agg"
     )
     # the second refresh must reuse the materialized base view, not
     # rebuild it (the memo is the "stored view" the refresh maintains)
-    key = (spark.sparkContext.applicationId, SF_DIR)
-    first_path = mn._IVM_VIEW_CACHE[key]
+    first_path = mn._ivm_base_view(spark, SF_DIR)
     mn.ivm_incremental_agg(spark, SF_DIR)
-    assert mn._IVM_VIEW_CACHE[key] == first_path
+    assert mn._ivm_base_view(spark, SF_DIR) == first_path
 
 
 def test_session_concurrency_matches_oracle_and_invariants(spark, duck):
@@ -211,8 +209,9 @@ def test_streaming_static_enrichment_matches_batch_oracle(spark, duck):
 
     from mapreduceece563_spark.sources.catalog import load_table
     from mapreduceece563_spark.streaming import enrich_stream as es
+    from mapreduceece563_spark.streaming import shared_drain
 
-    es.reset_enrich()
+    shared_drain.reset()
     sdf = es.streaming_static_enrichment(spark, SF_DIR)
     assert_frames_match(
         sdf, duck.execute(es.STREAMING_ENRICH_SQL), ctx="stream_enrich"
