@@ -47,7 +47,7 @@ def test_builds_once_and_returns_the_same_object(spark):
     )
 
 
-def test_concurrent_first_calls_build_once(spark):
+def test_concurrent_first_calls_share_one_object(spark):
     """Six threads ask for one key at once: the build runs once, under
     the key's lock, and every caller gets its object."""
     n = 6

@@ -129,6 +129,19 @@ def test_training_filter_two_shuffles_max(spark):
     assert plan.count("Exchange hashpartitioning") <= 2
 
 
+def test_no_cartesian_product_anywhere(spark):
+    """Global scale audit: no registry query may plan a true
+    CartesianProduct (a non-broadcast cross join materializes |A|x|B|
+    — always a bug at corpus scale; intentional tiny-side cross joins
+    must go through broadcast nested loop instead)."""
+    offenders = []
+    for name, fn in Q.items():
+        plan = plan_string(fn(spark, SF_DIR), "simple")
+        if "CartesianProduct" in plan:
+            offenders.append(name)
+    assert not offenders, f"CartesianProduct in: {offenders}"
+
+
 def test_q4_semi_join(spark):
     """EXISTS must plan as a semi join (each order emits at most once,
     never multiplied by matching lineitems), with the quarter filter

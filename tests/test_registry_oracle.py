@@ -1,58 +1,21 @@
 """The master parity test: every registered query with an oracle must
 match DuckDB on the sf0.001 tables — same check the driver runs at
-sf0.01 (row count + schema names + order-insensitive values).
-
-Each entry is built once, and two plan-only properties are checked on
-that same frame before it runs:
-
-- its output schema has ONLY scalar top-level columns. The driver
-  canonicalizes results with pandas ``sort_values`` before hashing; a
-  top-level ``array``/``struct``/``map`` column raises ``TypeError:
-  unhashable type`` there (round 3's one red row,
-  ``region_nations_agg``). Complex types are fine INSIDE a plan;
-  list-shaped answers go through ``array_join`` (see
-  region_nations_agg and inverted_index).
-- its pre-execution plan has no true CartesianProduct (a
-  non-broadcast cross join materializes |A|x|B| — always a bug at
-  corpus scale; intentional tiny-side cross joins must go through
-  broadcast nested loop instead)."""
+sf0.01 (row count + schema names + order-insensitive values)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import types as T
 
 from mapreduceece563_spark import registry
-from mapreduceece563_spark.plans import plan_string
 from tests.conftest import SF_DIR, assert_frames_match
 
 _ORACLES = registry.oracle_sql()
 _QUERIES = registry.queries()
 
-_COMPLEX = (T.ArrayType, T.StructType, T.MapType)
-
-
-def _built(name, spark):
-    """Build the entry and check its output schema and plan."""
-    sdf = _QUERIES[name](spark, SF_DIR)
-    bad = [
-        f"{f.name}: {f.dataType.simpleString()}"
-        for f in sdf.schema.fields
-        if isinstance(f.dataType, _COMPLEX)
-    ]
-    assert not bad, (
-        f"{name}: non-scalar top-level output column(s) {bad} — the "
-        "driver's pandas canonicalization cannot hash these; emit via "
-        "array_join / to_json instead"
-    )
-    plan = plan_string(sdf, "simple")
-    assert "CartesianProduct" not in plan, f"CartesianProduct in: {[name]}"
-    return sdf
-
 
 @pytest.mark.parametrize("name", sorted(_ORACLES))
 def test_query_matches_oracle(name, spark, duck):
-    sdf = _built(name, spark)
+    sdf = _QUERIES[name](spark, SF_DIR)
     rel = duck.execute(_ORACLES[name])
     assert_frames_match(sdf, rel, ctx=name)
 
@@ -68,5 +31,5 @@ if _NO_ORACLE:
 
     @pytest.mark.parametrize("name", _NO_ORACLE)
     def test_query_without_oracle_runs(name, spark):
-        sdf = _built(name, spark)
+        sdf = _QUERIES[name](spark, SF_DIR)
         assert sdf.count() >= 0
