@@ -55,14 +55,17 @@ def register(name: str, fn: QueryFn, oracle: str | None) -> None:
     _REGISTRY[name] = (fn, oracle)
 
 
-def _shipped(fn: QueryFn) -> QueryFn:
+def _shipped(name: str, fn: QueryFn) -> QueryFn:
     """Every registry callable first ships the package zip to the
     Python workers (no-op after the first call per SparkContext) so
     pickled-by-reference module functions import no matter what cwd /
-    sys.path the driving process has."""
+    sys.path the driving process has, and tags the calling thread's
+    Spark jobs with the entry name, so job and SQL metrics attribute
+    to the entry."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         ship_package(spark)
+        spark.sparkContext.setJobDescription(name)
         # Timestamp semantics contract: TIMESTAMP_NTZ test data is
         # reinterpreted as UTC instants (sources/catalog.py), and the
         # DuckDB oracles compute epoch_us on the same naive values —
@@ -75,7 +78,7 @@ def _shipped(fn: QueryFn) -> QueryFn:
 
 
 def queries() -> dict[str, QueryFn]:
-    return {name: _shipped(fn) for name, (fn, _) in _REGISTRY.items()}
+    return {name: _shipped(name, fn) for name, (fn, _) in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:

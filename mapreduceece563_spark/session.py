@@ -20,6 +20,14 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 _SHIPPED: set[str] = set()
 
 
+def _default_driver_mem() -> str:
+    """A third of physical memory, capped at 48g: the JVM collects
+    before it outgrows a small box, and a 32-core bench box keeps its
+    48g. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 * 1024, ram // 3 // 2**20)}m"
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers.
 
@@ -79,7 +87,10 @@ def get_spark(
         .config("spark.sql.codegen.maxFields", "260")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

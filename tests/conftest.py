@@ -16,14 +16,19 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    # session.py's default driver heap (48g) is sized for the 32-core
-    # bench box. On a 4-core, 15 GB VM the suite's JVM grew past
-    # physical memory before G1 collected (killed by the kernel at
-    # 15.3 GB RSS near the end of a full run); a bounded heap makes the
-    # JVM collect instead. An explicit SPARK_GRAFT_DRIVER_MEM wins.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     spark = get_spark("mapreduceece563_spark-tests", cpus=8, shuffle_partitions=8)
     yield spark
+
+
+@pytest.fixture(scope="module")
+def fresh_round7_pool():
+    """Forget the round-7 pool's drain once per requesting module: the
+    module's first pool member re-drains, the others read that drain's
+    sinks, and no other drain is forgotten."""
+    from mapreduceece563_spark.cachemgr import forget
+    from mapreduceece563_spark.streaming import shared_drain
+
+    forget(shared_drain.drain_round7_streams)
 
 
 @pytest.fixture(scope="session")

@@ -1,8 +1,9 @@
 """Degenerate-input regressions from the round-12 adversarial-vintage
-audits (tools/fuzz_vintage.py): data shapes the committed fixtures
-never produce but real feeds can. Each pin is a crash-vs-NULL hazard
-where Spark's ANSI arithmetic raised while the DuckDB oracle quietly
-returned NULL — the fix makes the NULL explicit on BOTH engines.
+audits (tools/fuzz_vintage.py values, rel): data shapes the
+committed fixtures never produce but real feeds can. Each pin is a
+crash-vs-NULL hazard where Spark's ANSI arithmetic raised while the
+DuckDB oracle quietly returned NULL — the fix makes the NULL explicit
+on BOTH engines.
 (The zero-token-source mixture pins live in test_trainprep.py.)"""
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Micro-vintage smoke tier (VERDICT r12 ask #7).
 
-The full adversarial-vintage audits (tools/fuzz_vintage.py,
-tools/fuzz_vintage_rel.py) rebuild every table with degenerate shapes
+The full adversarial-vintage audits (tools/fuzz_vintage.py values,
+tools/fuzz_vintage.py rel) rebuild every table with degenerate shapes
 and re-run ALL oracle pairs — ~3-5 min each, on demand. This module
 is the commit-time subset: ONE degenerate shape per family, checked
 through the handful of oracle pairs whose round-12 bug classes those
@@ -175,7 +175,7 @@ def test_micro_vintage_parity(name, spark, micro_vintage):
 
 # --- micro KEY-SKEW vintage (round 13) ---------------------------------------
 #
-# The commit-time subset of tools/fuzz_vintage_skew.py: giant-group
+# The commit-time subset of tools/fuzz_vintage.py skew: giant-group
 # key distributions (half the events on one user, 60% of docs on one
 # source, 70% of vectors in one label cell) through the entries whose
 # plans have per-key windows, heavy-hitter thresholds, source-vs-rest
@@ -250,7 +250,7 @@ def test_micro_skew_parity(name, spark, micro_skew):
 
 # --- micro UNICODE vintage (round 13) ----------------------------------------
 #
-# The commit-time subset of tools/fuzz_vintage_unicode.py, pinning the
+# The commit-time subset of tools/fuzz_vintage.py unicode, pinning the
 # round-13 unicode harvest: (1) the chunk-file reader splits lines
 # ONLY at '\n' (Python universal-newlines mode also split at bare \r,
 # fabricating lines and tearing sink records); (2) the corpus writer
@@ -351,7 +351,7 @@ def test_levenshtein_is_byte_based(spark):
 
 # --- micro NULL vintage (round 13) -------------------------------------------
 #
-# The commit-time subset of tools/fuzz_vintage_null.py, pinning the
+# The commit-time subset of tools/fuzz_vintage.py null, pinning the
 # round-13 NULL-policy harvest: NULL value is not a measurement
 # (drift/regression families), NULL-text docs carry no media payload
 # or landing-zone object, scorer audits need lang+source+quality

@@ -225,17 +225,17 @@ def test_kmv_matches_oracle_and_estimates_are_sane(spark, duck):
             assert r["kmv_estimate"] == r["n_exact"]
 
 
-def test_streaming_sliding_windows_matches_batch_oracle(spark, duck):
+def test_streaming_sliding_windows_matches_batch_oracle(
+    spark, duck, fresh_round7_pool
+):
     """Drained sliding-window stream equals the arithmetic window
     assignment (each event in exactly two 4h/2h windows); total mass
     across windows is exactly 2x the event count."""
     from tests.conftest import assert_frames_match
 
     from mapreduceece563_spark.sources.catalog import load_table
-    from mapreduceece563_spark.streaming import shared_drain
     from mapreduceece563_spark.streaming import windowed_stream as ws
 
-    shared_drain.reset()
     sdf = ws.streaming_sliding_windows(spark, SF_DIR)
     assert_frames_match(
         sdf,
@@ -384,7 +384,9 @@ def test_kmv_join_cardinality_matches_oracle_and_estimate_sane(
         assert r["err_ppm"] <= 400_000, f"KMV intersection off: {r}"
 
 
-def test_streaming_outer_join_matches_batch_left_join(spark, duck):
+def test_streaming_outer_join_matches_batch_left_join(
+    spark, duck, fresh_round7_pool
+):
     """The drained LEFT OUTER stream-stream join must equal the batch
     LEFT JOIN — including the unmatched tail, which only a correct
     watermark eviction can emit. Consistency vs the inner-join
@@ -394,9 +396,7 @@ def test_streaming_outer_join_matches_batch_left_join(spark, duck):
 
     from mapreduceece563_spark.sources.catalog import load_table
     from mapreduceece563_spark.streaming import outer_join_stream as oj
-    from mapreduceece563_spark.streaming import shared_drain
 
-    shared_drain.reset()
     sdf = oj.streaming_outer_join_attribution(spark, SF_DIR)
     assert_frames_match(
         sdf,

@@ -200,7 +200,9 @@ def test_benford_audit_matches_oracle_and_shares_sum(spark, duck):
     assert sum(r["expected_ppm"] for r in rows) == 1_000_000
 
 
-def test_streaming_static_enrichment_matches_batch_oracle(spark, duck):
+def test_streaming_static_enrichment_matches_batch_oracle(
+    spark, duck, fresh_round7_pool
+):
     """The drained stream-static broadcast join + update-mode segment
     aggregate equals the batch join — the stateless streaming-join
     shape (no watermark, no join state). Every event's user exists in
@@ -209,9 +211,7 @@ def test_streaming_static_enrichment_matches_batch_oracle(spark, duck):
 
     from mapreduceece563_spark.sources.catalog import load_table
     from mapreduceece563_spark.streaming import enrich_stream as es
-    from mapreduceece563_spark.streaming import shared_drain
 
-    shared_drain.reset()
     sdf = es.streaming_static_enrichment(spark, SF_DIR)
     assert_frames_match(
         sdf, duck.execute(es.STREAMING_ENRICH_SQL), ctx="stream_enrich"

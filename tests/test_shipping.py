@@ -49,3 +49,15 @@ def test_python_udf_query_runs_with_foreign_cwd(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "ROWS=50" in out.stdout
+
+
+def test_registry_call_tags_jobs_with_entry_name(spark):
+    """Every registry call sets the calling thread's Spark job
+    description to its entry name, so job and SQL metrics attribute to
+    the entry."""
+    from mapreduceece563_spark import registry
+    from tests.conftest import SF_DIR
+
+    registry.queries()["wordcount"](spark, SF_DIR).collect()
+    desc = spark.sparkContext.getLocalProperty("spark.job.description")
+    assert desc == "wordcount"
