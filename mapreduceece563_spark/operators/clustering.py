@@ -98,15 +98,12 @@ def _argmin_fold(cands_col: Column, vec_col: Column) -> Column:
 
 
 def _assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest centroid per vector; ties break on cluster id.
+    """Nearest centroid per vector ROW; ties break on cluster id.
 
-    RELIES on vec_id being unique in the embeddings table (one row in
-    = one row out): the r13 rewrite emits one assignment per input
-    ROW, where the original ROW_NUMBER-over-vec_id (and the oracle's
-    _assign_sql, which still dedups) collapsed duplicate vec_ids. The
-    fixture guarantees uniqueness (tests/test_queue_r11.py::
-    test_embeddings_vec_id_unique pins it); a duplicated vec_id would
-    double-count in _update and diverge from the oracle.
+    One row in = one row out: a vec_id that appears twice is assigned
+    (and counted in _update) twice, and the oracle's _assign_sql picks
+    per input row the same way (tests/test_queue_r11.py::
+    test_kmeans_duplicate_vec_ids_match_oracle).
 
     r13 (second pass): the argmin is now a MAP-SIDE FOLD over the
     broadcast codebook collected into one array — no K-way row
@@ -176,27 +173,35 @@ def kmeans_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The vector CTE the k-means oracles start from: one row per
+# embeddings row, with the per-row id ``rid`` _assign_sql keys on.
+_VECS_SQL = """v AS (
+  SELECT row_number() OVER () AS rid, vec_id,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings
+)"""
+
+
 def _assign_sql(src: str, cents: str, out: str) -> str:
+    """Nearest centroid per row of ``src``, which carries a per-row id
+    ``rid`` (the engine's _assign is per row, not per vec_id)."""
     d = _SQDIST_SQL.format(a=f"{src}.v", b=f"{cents}.c")
     return f"""
 {out}_s AS (
-  SELECT {src}.vec_id, {cents}.cid, {d} AS dist, {src}.v
+  SELECT {src}.rid, {src}.vec_id, {cents}.cid, {d} AS dist, {src}.v
   FROM {src} CROSS JOIN {cents}
 ),
 {out} AS (
   SELECT vec_id, cid, dist, v FROM (
     SELECT vec_id, cid, dist, v,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
+           ROW_NUMBER() OVER (PARTITION BY rid ORDER BY dist, cid) AS rn
     FROM {out}_s
   ) WHERE rn = 1
 )"""
 
 
 KMEANS_SQL = f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
+WITH {_VECS_SQL},
 c0 AS (SELECT vec_id AS cid, v AS c FROM v WHERE vec_id < {K}),
 {_assign_sql('v', 'c0', 'a1').lstrip()},
 e1 AS (
@@ -359,10 +364,7 @@ _DOT_FOLD_SQL = (
 )
 
 SEMDEDUP_SQL = f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
+WITH {_VECS_SQL},
 c0 AS (SELECT vec_id AS cid, v AS c FROM v WHERE vec_id < {K}),
 {_assign_sql('v', 'c0', 'a1').lstrip()},
 e1 AS (
@@ -630,10 +632,7 @@ def silhouette_by_cell(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SILHOUETTE_SQL = f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
+WITH {_VECS_SQL},
 c0 AS (SELECT vec_id AS cid, v AS c FROM v WHERE vec_id < {K}),
 {_assign_sql('v', 'c0', 'a1').lstrip()},
 e1 AS (

@@ -16,6 +16,12 @@ stages are map-only over the scan; metadata-only plans prune the
 payload column entirely (check ReadSchema). Batch size is bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a partition of
 large blobs never materializes at once.
+
+The media tables read documents WITHOUT ``load_table``'s spread: every
+consumer crosses into a Python worker, and a round-robin shuffle in
+front of that boundary cost more than the parallelism it bought (all
+13 consumers ran 0.61-0.84x the time without it; sf0.1, 4 cores,
+6 alternating reps).
 """
 
 from __future__ import annotations
@@ -143,7 +149,7 @@ def documents_as_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes stand in for an opaque payload (the container has no real
     image/audio fixtures). Gives the multimodal path a real, oracle-
     checkable input."""
-    docs = load_table(spark, sf_dir, "documents", spread=True).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     return docs.select(
@@ -239,7 +245,7 @@ def documents_as_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     length so the resize math is oracle-checkable. A NULL-text doc
     has no payload to decode and is excluded (NULL-vintage policy:
     no media row, not a NULL payload into the resize UDF)."""
-    docs = load_table(spark, sf_dir, "documents", spread=True).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars"
     ).filter(F.col("text").isNotNull())
     return docs.select(
@@ -307,7 +313,7 @@ def documents_as_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions and pixels derive deterministically from doc_id:
     w = 4 + doc_id % 5, h = 3 + doc_id % 4,
     pixel[i] = (doc_id*31 + i*7) % 256 over the row-major RGB raster."""
-    docs = load_table(spark, sf_dir, "documents", spread=True).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -509,7 +515,7 @@ def documents_as_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fake clip table: duration derived from doc length (bounded so
     frame counts stay sane). NULL-text docs carry no payload and are
     excluded (same policy as documents_as_images)."""
-    docs = load_table(spark, sf_dir, "documents", spread=True).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars"
     ).filter(F.col("text").isNotNull())
     return docs.select(
@@ -602,7 +608,7 @@ def documents_as_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose samples derive deterministically from doc_id:
     n = 64 + doc_id % 97,
     sample[i] = ((doc_id*131 + i*17) % 4096) - 2048."""
-    docs = load_table(spark, sf_dir, "documents", spread=True).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -748,7 +754,7 @@ def documents_as_vf1(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = 2 + doc_id % 3, nframes = 2 + doc_id % 5,
     pixel[f, i] = (doc_id*37 + f*11 + i*13) % 256 over each frame's
     row-major RGB raster."""
-    docs = load_table(spark, sf_dir, "documents", spread=True).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -878,7 +884,7 @@ def documents_as_ppm_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel[i] = (group*31 + i*7) % 251; offset = doc_id % 3 adds a
     uniform brightness shift (no wrap: base <= 250, offset <= 2), so
     members of a group are the same image at three exposures."""
-    docs = load_table(spark, sf_dir, "documents", spread=True).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

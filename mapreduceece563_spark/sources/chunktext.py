@@ -694,12 +694,11 @@ def _start_stream_wc(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from ..functions.text import tokenize_lines
-    from ..streaming.wordcount_stream import _fresh_workdir
+    from ..streaming.wordcount_stream import _fresh_workdir, batch_sink
 
     src = chunked_corpus_dir(sf_dir)
     work = _fresh_workdir("chunktext_stream", sf_dir)
     sink = os.path.join(work, "partials")
-    os.makedirs(sink, exist_ok=True)
     lines = (
         spark.readStream.format("chunktext")
         .option("path", src)
@@ -717,14 +716,8 @@ def _start_stream_wc(spark, sf_dir: str):
     counts = tokenize_lines(lines).groupBy("word").agg(
         F.count("*").alias("cnt")
     )
-
-    def sink_fn(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
     q = (
-        counts.writeStream.foreachBatch(sink_fn)
+        counts.writeStream.foreachBatch(batch_sink(counts, sink))
         .outputMode("update")
         .option("checkpointLocation", os.path.join(work, "ckpt"))
         .start()
@@ -750,19 +743,11 @@ def streaming_wordcount_via_datasource(spark, sf_dir: str):
     replay), the same tokenize chain, update-mode counts persisted
     per batch_id and reduced last-writer-wins — hash-equal to the
     batch WORDCOUNT_SQL oracle."""
-    from pyspark.sql import functions as F
-
-    from ..streaming.wordcount_stream import _partial_files
+    from ..streaming.wordcount_stream import last_emission, read_emissions
 
     register_chunktext(spark)
     sink = _stream_wc_drain(spark, sf_dir)
-    if not _partial_files(sink):
-        return spark.createDataFrame([], "word STRING, cnt BIGINT")
-    emissions = spark.read.parquet(sink)
-    last = emissions.groupBy("word").agg(
-        F.max(F.struct("batch_id", "cnt")).alias("_s")
-    )
-    return last.select("word", F.col("_s.cnt").alias("cnt"))
+    return last_emission(read_emissions(spark, sink), ["word"])
 
 
 def wordcount_via_datasource_packed(spark, sf_dir: str):

@@ -29,12 +29,18 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.relational import _cents
 from ..sources.catalog import load_table
-from .wordcount_stream import _fresh_workdir, event_chunks, start_batches
+from .wordcount_stream import (
+    _fresh_workdir,
+    event_chunks,
+    last_emission,
+    read_emissions,
+    start_batches,
+)
 
 
 def _start_enrich(spark: SparkSession, sf_dir: str):
@@ -66,20 +72,9 @@ def streaming_static_enrichment(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from .shared_drain import drain_round7_streams
-    from .wordcount_stream import _partial_files
 
     updates_dir = drain_round7_streams(spark, sf_dir)["enrich"]
-    if not _partial_files(updates_dir):
-        return spark.createDataFrame(
-            [], "segment STRING, n_events BIGINT, value_cents BIGINT"
-        )
-    updates = spark.read.parquet(updates_dir)
-    w = Window.partitionBy("segment").orderBy(F.col("batch_id").desc())
-    return (
-        updates.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("segment", "n_events", "value_cents")
-    )
+    return last_emission(read_emissions(spark, updates_dir), ["segment"])
 
 
 STREAMING_ENRICH_SQL = """

@@ -14,8 +14,10 @@ arrives (no sentinel flush needed, unlike append-mode session
 windows).
 
 Losslessness argument (why stream == batch here): both sources
-replay as the SAME time-ranged chunk boundaries written in mtime
-order (the session-window harness's layout), so the two sides
+replay the SAME time-ranged chunk boundaries (``time_slices`` over
+the whole event table), written by ``write_replay`` with explicit,
+strictly increasing mtimes so the file source lists them oldest
+range first (the session-window harness's layout), so the two sides
 advance through event time together and the query watermark — the
 min across sources, lagging the newest data by 1 hour > the 30-min
 join window — can never pass a row whose partner has not arrived.
@@ -33,6 +35,7 @@ the foreachBatch sink appends matches idempotently by batch_id.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,66 +43,44 @@ from pyspark.sql import functions as F
 from ..cachemgr import per_session
 from ..sources.catalog import load_table
 from .wordcount_stream import (
-    ReplayOrder,
     _fresh_workdir,
-    _partial_files,
+    read_emissions,
     start_batches,
+    time_slices,
+    write_replay,
 )
 
 JOIN_WINDOW_MIN = 30
 N_JOIN_CHUNKS = 4
 
 
-def _write_time_ordered_chunks(
-    df: DataFrame, dest: str, lo: int, hi: int, n_chunks: int
-) -> None:
-    """Sequential time-ranged chunk writes; the file source's
-    mtime-ordered listing then replays them oldest range first.
-    Replay order is a CORRECTNESS precondition here (see module
-    docstring), so each chunk's mtime is assigned explicitly and
-    strictly increasing — never left to filesystem timestamp
-    resolution, where sub-second writes can tie and reorder."""
-    order = ReplayOrder(dest)
-    span = max(1, (hi - lo) + 1)
-    us = F.unix_micros(F.col("ts"))
-    for k in range(n_chunks):
-        a = lo + (span * k) // n_chunks
-        b = lo + (span * (k + 1)) // n_chunks
-        (
-            df.filter((us >= a) & (us < b))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(dest)
-        )
-        order.mark(dest)
-
-
 def _purchase_view_chunks(
-    spark: SparkSession, sf_dir: str, src_work: str
+    spark: SparkSession,
+    sf_dir: str,
+    src_work: str,
+    tail: Sequence[DataFrame] = (),
 ) -> tuple[str, str]:
-    """Write purchases and views as time-ordered chunks over SHARED
-    chunk boundaries (one 1-row min/max action over the whole
-    stream) under ``src_work``; returns (purchases dir, views dir)."""
-    p_src = os.path.join(src_work, "purchases")
-    v_src = os.path.join(src_work, "views")
-    for d in (p_src, v_src):
-        os.makedirs(d, exist_ok=True)
+    """Write purchases and views under ``src_work`` as time-ordered
+    replays over SHARED chunk boundaries (one min/max action over the
+    whole stream; each slice then splits by kind), each side followed
+    by the frames in ``tail``; returns (purchases dir, views dir)."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    bounds = ev.agg(
-        F.unix_micros(F.min("ts")).alias("lo"),
-        F.unix_micros(F.max("ts")).alias("hi"),
-    ).first()
-    if bounds["lo"] is not None:
-        for kind, dest in (("purchase", p_src), ("view", v_src)):
-            _write_time_ordered_chunks(
-                ev.filter(F.col("event_type") == kind).select(
+    slices = time_slices(ev, range(N_JOIN_CHUNKS))
+    return tuple(
+        write_replay(
+            os.path.join(src_work, side),
+            [
+                s.filter(F.col("event_type") == kind).select(
                     "user_id", "ts", "event_id"
-                ),
-                dest, bounds["lo"], bounds["hi"], N_JOIN_CHUNKS,
-            )
-    return p_src, v_src
+                )
+                for s in slices
+            ]
+            + list(tail),
+        )
+        for kind, side in (("purchase", "purchases"), ("view", "views"))
+    )
 
 
 @per_session
@@ -165,14 +146,9 @@ def streaming_purchase_view_join(
     from .shared_drain import drain_round7_streams
 
     sink = drain_round7_streams(spark, sf_dir)["join"]
-    if not _partial_files(sink):
-        return spark.createDataFrame(
-            [],
-            "user_id BIGINT, n_pairs BIGINT, n_matched_purchases BIGINT",
-        )
-    pairs = spark.read.parquet(sink)
     return (
-        pairs.groupBy(F.col("p_user").alias("user_id"))
+        read_emissions(spark, sink)
+        .groupBy(F.col("p_user").alias("user_id"))
         .agg(
             F.count("*").alias("n_pairs"),
             F.count_distinct("p_event_id").alias("n_matched_purchases"),

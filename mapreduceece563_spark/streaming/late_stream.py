@@ -38,16 +38,18 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cachemgr import per_session
 from ..sources.catalog import load_table
 from .wordcount_stream import (
-    ReplayOrder,
     _fresh_workdir,
-    _partial_files,
+    last_emission,
+    read_emissions,
     start_batches,
+    time_slices,
+    write_replay,
 )
 
 N_LATE_CHUNKS = 6
@@ -63,29 +65,11 @@ HOUR_US = 3600 * 1_000_000
 def _late_src(spark: SparkSession, sf_dir: str) -> str:
     """The out-of-order chunk replay (chunk k written at position
     index(LATE_PERM, k)). Input data, kept across reset()."""
-    src = os.path.join(_fresh_workdir("late_audit_src", sf_dir), "src")
-    os.makedirs(src, exist_ok=True)
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
-    bounds = ev.agg(
-        F.unix_micros(F.min("ts")).alias("lo"),
-        F.unix_micros(F.max("ts")).alias("hi"),
-    ).first()
-    lo, hi = bounds["lo"], bounds["hi"]
-    order = ReplayOrder(src)
-    if lo is not None:
-        span = max(1, (hi - lo) + 1)
-        us = F.unix_micros(F.col("ts"))
-        for k in LATE_PERM:
-            a = lo + (span * k) // N_LATE_CHUNKS
-            b = lo + (span * (k + 1)) // N_LATE_CHUNKS
-            (
-                ev.filter((us >= a) & (us < b))
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(src)
-            )
-            order.mark(src)
-    return src
+    return write_replay(
+        os.path.join(_fresh_workdir("late_audit_src", sf_dir), "src"),
+        time_slices(ev, LATE_PERM),
+    )
 
 
 def _start_late(spark: SparkSession, sf_dir: str):
@@ -128,19 +112,7 @@ def streaming_late_data_audit(
     pinned drop rule (module docstring) arithmetically, so a
     mismatch means the engine's late-data semantics moved."""
     sink = _late_drain(spark, sf_dir)
-    if not _partial_files(sink):
-        return spark.createDataFrame(
-            [], "hour TIMESTAMP, event_type STRING, n_events BIGINT"
-        )
-    updates = spark.read.parquet(sink)
-    w = Window.partitionBy("hour", "event_type").orderBy(
-        F.col("batch_id").desc()
-    )
-    return (
-        updates.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("hour", "event_type", "n_events")
-    )
+    return last_emission(read_emissions(spark, sink), ["hour", "event_type"])
 
 
 def _perm_values() -> str:

@@ -38,45 +38,24 @@ from pyspark.sql import functions as F
 
 from ..cachemgr import per_session
 from .join_stream import JOIN_WINDOW_MIN, _interval_join, _purchase_view_chunks
-from .wordcount_stream import (
-    ReplayOrder,
-    _fresh_workdir,
-    _partial_files,
-    start_batches,
-)
+from .wordcount_stream import _fresh_workdir, read_emissions, start_batches
 
 OUTER_SENTINELS = ("2030-01-01 00:00:00", "2030-01-02 00:00:00")
-
-
-def _append_sentinels(spark: SparkSession, dest: str) -> None:
-    order = ReplayOrder(dest)
-    for s_ts in OUTER_SENTINELS:
-        (
-            spark.createDataFrame(
-                [(-1, s_ts, -1)], "user_id BIGINT, ts STRING, event_id BIGINT"
-            )
-            .select(
-                "user_id",
-                F.col("ts").cast("timestamp").alias("ts"),
-                "event_id",
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(dest)
-        )
-        order.mark(dest)
 
 
 @per_session
 def _outer_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """The join's time-ordered replay plus two sentinel files per
     side. Input data, kept across reset() like the sibling drains'."""
-    p_src, v_src = _purchase_view_chunks(
-        spark, sf_dir, _fresh_workdir("stream_outer_src", sf_dir)
+    sentinels = [
+        spark.createDataFrame(
+            [(-1, ts, -1)], "user_id BIGINT, ts STRING, event_id BIGINT"
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        for ts in OUTER_SENTINELS
+    ]
+    return _purchase_view_chunks(
+        spark, sf_dir, _fresh_workdir("stream_outer_src", sf_dir), sentinels
     )
-    _append_sentinels(spark, p_src)
-    _append_sentinels(spark, v_src)
-    return p_src, v_src
 
 
 def _start_outer_join(spark: SparkSession, sf_dir: str):
@@ -99,13 +78,7 @@ def streaming_outer_join_attribution(
     from .shared_drain import drain_round7_streams
 
     sink = drain_round7_streams(spark, sf_dir)["outer"]
-    if not _partial_files(sink):
-        return spark.createDataFrame(
-            [],
-            "user_id BIGINT, n_purchases BIGINT, n_pairs BIGINT,"
-            " n_unmatched BIGINT",
-        )
-    rows = spark.read.parquet(sink).filter(F.col("p_user") >= 0)
+    rows = read_emissions(spark, sink).filter(F.col("p_user") >= 0)
     return (
         rows.groupBy(F.col("p_user").alias("user_id"))
         .agg(

@@ -42,8 +42,9 @@ from ..operators.analytics import (
 from ..sources.catalog import load_table
 from .wordcount_stream import (
     _fresh_workdir,
-    _partial_files,
     event_chunks,
+    last_emission,
+    read_emissions,
     start_batches,
 )
 
@@ -94,22 +95,7 @@ def streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "bin")
         .agg(F.count(F.lit(1)).alias("ref_n"))
     )
-    if _partial_files(sink):
-        updates = spark.read.parquet(sink)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("event_type", "bin").orderBy(
-            F.col("batch_id").desc()
-        )
-        cur = (
-            updates.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("event_type", "bin", "cur_n")
-        )
-    else:
-        cur = spark.createDataFrame(
-            [], "event_type STRING, bin BIGINT, cur_n BIGINT"
-        )
+    cur = last_emission(read_emissions(spark, sink), ["event_type", "bin"])
     cells = (
         ref.join(cur, ["event_type", "bin"], "full")
         .select(

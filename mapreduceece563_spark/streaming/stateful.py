@@ -105,37 +105,20 @@ def streaming_user_profile_batch(spark, sf_dir: str) -> DataFrame:
     batch_id, then reduce to each user's LAST emission — which, since
     state accumulates monotonically, is the user's final total and
     must equal the plain batch aggregate the DuckDB oracle runs.
-    The last-emission reduce is the same partial-aggregable
-    max(struct) shape as ``user_latest_state``.
+    The last-emission reduce is ``wordcount_stream.last_emission``,
+    the same partial-aggregable max(struct) shape as
+    ``user_latest_state``.
 
     The drain itself runs through the shared concurrent harness
     (shared_drain.drain_event_streams) — this query's operator graph
     is unchanged, but its source drain overlaps the sibling hourly
     and dedup streams so a registry pass pays max(drain), not
     sum(drain)."""
-    from pyspark.sql import functions as F
-
     from .shared_drain import drain_event_streams
-    from .wordcount_stream import _partial_files
+    from .wordcount_stream import last_emission, read_emissions
 
     out = drain_event_streams(spark, sf_dir)["profile"]
-    if not _partial_files(out):
-        # empty source: availableNow can finish without a single
-        # foreachBatch invocation — honor the zero-row contract.
-        return spark.createDataFrame(
-            [], "user_id BIGINT, n_events BIGINT, value_sum DOUBLE"
-        )
-    # read the base dir (not a batch_id=* glob) so the batch_id
-    # partition column is inferred — it's the last-emission ordering key
-    emissions = spark.read.parquet(out)
-    last = emissions.groupBy("user_id").agg(
-        F.max(F.struct("batch_id", "n_events", "value_sum")).alias("_s")
-    )
-    return last.select(
-        "user_id",
-        F.col("_s.n_events").alias("n_events"),
-        F.col("_s.value_sum").alias("value_sum"),
-    )
+    return last_emission(read_emissions(spark, out), ["user_id"])
 
 
 STREAMING_USER_PROFILE_SQL = """
@@ -239,29 +222,10 @@ def streaming_tws_user_profile(spark, sf_dir: str) -> DataFrame:
     (ValueState + MapState on RocksDB), reduced to each key's last
     update-mode emission and hash-checked against the plain batch
     aggregate."""
-    from pyspark.sql import functions as F
-
-    from .wordcount_stream import _partial_files
+    from .wordcount_stream import last_emission, read_emissions
 
     sink = _tws_drain(spark, sf_dir)
-    if not _partial_files(sink):
-        return spark.createDataFrame(
-            [],
-            "user_id BIGINT, n_events BIGINT, value_sum DOUBLE,"
-            " n_types BIGINT",
-        )
-    emissions = spark.read.parquet(sink)
-    last = emissions.groupBy("user_id").agg(
-        F.max(
-            F.struct("batch_id", "n_events", "value_sum", "n_types")
-        ).alias("_s")
-    )
-    return last.select(
-        "user_id",
-        F.col("_s.n_events").alias("n_events"),
-        F.col("_s.value_sum").alias("value_sum"),
-        F.col("_s.n_types").alias("n_types"),
-    )
+    return last_emission(read_emissions(spark, sink), ["user_id"])
 
 
 STREAMING_TWS_SQL = """

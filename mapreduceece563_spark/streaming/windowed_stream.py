@@ -13,9 +13,10 @@ spanning several micro-batches is emitted several times, and the
 last emission holds the complete aggregate. The sink writes each
 batch's updates under a batch_id-keyed path (idempotent on replay —
 a retried batch overwrites its own directory, never double-counts),
-and the final merge keeps, per group, the row from the highest
-batch_id. That last-writer-wins merge is exactly the upsert a
-key-value sink (Delta MERGE, HBase put) performs at scale.
+and the final merge (``wordcount_stream.last_emission``) keeps, per
+group, the row from the highest batch_id. That last-writer-wins
+merge is exactly the upsert a key-value sink (Delta MERGE, HBase
+put) performs at scale.
 
 No watermark here, deliberately: this is a finite availableNow drain
 where dropping "late" rows would diverge from the batch oracle, and
@@ -35,17 +36,19 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cachemgr import per_session
 from ..sources.catalog import load_table
 from .wordcount_stream import (
-    ReplayOrder,
     _fresh_workdir,
-    _partial_files,
     event_chunks,
+    last_emission,
+    read_emissions,
     start_batches,
+    time_slices,
+    write_replay,
 )
 
 
@@ -58,23 +61,8 @@ def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .shared_drain import drain_event_streams
 
     updates_dir = drain_event_streams(spark, sf_dir)["hourly"]
-    if not _partial_files(updates_dir):
-        # empty source: no foreachBatch invocation ever ran
-        return spark.createDataFrame(
-            [],
-            "hour TIMESTAMP, event_type STRING, n_events BIGINT,"
-            " value_sum DOUBLE",
-        )
-    # reading the root dir (not a batch_id=* glob) lets partition
-    # discovery surface batch_id as a column for the merge
-    updates = spark.read.parquet(updates_dir)
-    w = Window.partitionBy("hour", "event_type").orderBy(
-        F.col("batch_id").desc()
-    )
-    return (
-        updates.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("hour", "event_type", "n_events", "value_sum")
+    return last_emission(
+        read_emissions(spark, updates_dir), ["hour", "event_type"]
     )
 
 
@@ -86,10 +74,11 @@ def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # source whose replay is time-ordered ACROSS micro-batches, so the
 # watermark only ever moves forward past data that is fully ingested,
 # and (b) something to push the final watermark past the last real
-# session. This harness builds both: the event table is written as
-# strictly time-ranged chunk files in mtime order (the file source
-# replays them oldest-first), and two far-future SENTINEL files (a
-# user_id=-1 row each) land in their own final micro-batches — the
+# session. This harness builds both in one ``write_replay``: the event
+# table's ``time_slices`` as strictly time-ranged chunk files in mtime
+# order (the file source replays them oldest-first), then two
+# far-future SENTINEL files (a user_id=-1 row each) that land in their
+# own final micro-batches — the
 # first advances the watermark past every real session, the second
 # triggers the batch in which that eviction is emitted. Sentinels are
 # filtered from the read-back. The watermark delay (1 hour) exceeds
@@ -107,45 +96,18 @@ def _session_src(spark: SparkSession, sf_dir: str) -> str:
     """The time-ordered chunk replay of (user_id, ts) plus the two
     sentinel files. Input data, not part of the drain: reset() keeps
     it, so a bench pass re-times the drain, not this write (~6 s of
-    scans at sf0.1)."""
-    src = os.path.join(_fresh_workdir("session_win_src", sf_dir), "src")
-    os.makedirs(src, exist_ok=True)
+    scans at sf0.1). Replay order is load-bearing for the watermark
+    (see join_stream's module docstring)."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    # Harness setup (not a query path): one 1-row min/max action
-    # to derive the chunk boundaries for the time-ordered replay.
-    bounds = ev.agg(
-        F.unix_micros(F.min("ts")).alias("lo"),
-        F.unix_micros(F.max("ts")).alias("hi"),
-    ).first()
-    lo, hi = bounds["lo"], bounds["hi"]
-    # Replay order is load-bearing for the watermark (see
-    # join_stream's module docstring); assign strictly increasing
-    # mtimes per chunk so coarse filesystem timestamps can't tie
-    # and reorder the sequential writes.
-    order = ReplayOrder(src)
-    if lo is not None:
-        span = max(1, (hi - lo) + 1)
-        us = F.unix_micros(F.col("ts"))
-        for k in range(N_SESSION_CHUNKS):
-            a = lo + (span * k) // N_SESSION_CHUNKS
-            b = lo + (span * (k + 1)) // N_SESSION_CHUNKS
-            (
-                ev.filter((us >= a) & (us < b))
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(src)
-            )
-            order.mark(src)
-    for s_ts in SESSION_SENTINELS:
-        (
-            spark.createDataFrame([(-1, s_ts)], "user_id BIGINT, ts STRING")
-            .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-        order.mark(src)
-    return src
+    sentinels = [
+        spark.createDataFrame([(-1, ts)], "user_id BIGINT, ts STRING")
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        for ts in SESSION_SENTINELS
+    ]
+    return write_replay(
+        os.path.join(_fresh_workdir("session_win_src", sf_dir), "src"),
+        time_slices(ev, range(N_SESSION_CHUNKS)) + sentinels,
+    )
 
 
 def _start_session_windows(spark: SparkSession, sf_dir: str):
@@ -189,14 +151,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the batch lag/cumsum SQL. See the section comment above
     for why this is lossless."""
     sink = _session_window_drain(spark, sf_dir)
-    if not _partial_files(sink):
-        return spark.createDataFrame(
-            [],
-            "user_id BIGINT, session_start TIMESTAMP,"
-            " session_end TIMESTAMP, n_events BIGINT",
-        )
     return (
-        spark.read.parquet(sink)
+        read_emissions(spark, sink)
         .filter(F.col("user_id") >= 0)
         .select("user_id", "session_start", "session_end", "n_events")
     )
@@ -256,20 +212,8 @@ def streaming_sliding_windows(
     from .shared_drain import drain_round7_streams
 
     updates_dir = drain_round7_streams(spark, sf_dir)["sliding"]
-    if not _partial_files(updates_dir):
-        return spark.createDataFrame(
-            [],
-            "window_start TIMESTAMP, event_type STRING,"
-            " n_events BIGINT, value_cents BIGINT",
-        )
-    updates = spark.read.parquet(updates_dir)
-    w = Window.partitionBy("window_start", "event_type").orderBy(
-        F.col("batch_id").desc()
-    )
-    return (
-        updates.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("window_start", "event_type", "n_events", "value_cents")
+    return last_emission(
+        read_emissions(spark, updates_dir), ["window_start", "event_type"]
     )
 
 

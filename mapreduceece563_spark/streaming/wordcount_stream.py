@@ -15,20 +15,35 @@ mode (emit changed keys per micro-batch) feeding an idempotent
 foreachBatch sink — never ``complete`` mode, which re-emits the whole
 state each trigger. Windowed aggregations bound their state with a
 watermark, after which expired windows are dropped.
+
+The drain contract every streaming entry uses lives here. Replay
+fixtures go in through ``write_replay`` (frames in order, explicit
+increasing mtimes; ``time_slices`` cuts a table into time-ranged
+frames). Micro-batches come out through ``start_batches`` /
+``batch_sink``: one idempotent ``batch_id=<id>`` directory per batch
+plus the recorded output schema. Entries read a sink back with
+``read_emissions``, which is also correct on a sink no batch reached,
+and reduce update-mode output with ``last_emission``.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import shutil
 import tempfile
-from typing import Callable
+from typing import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.text import tokenize_lines
 from ..sources.catalog import load_table
+
+SCHEMA_FILE = "_schema.json"
+REPLAY_BASE_MTIME = 946_684_800  # 2000-01-01T00:00:00Z; any fixed past instant
 
 
 # One retained work dir per batch-harness tag: the returned DataFrame
@@ -89,6 +104,29 @@ def event_chunks(spark: SparkSession, sf_dir: str) -> str:
     return spill_chunks(ev, sf_dir, "events_shared")
 
 
+def batch_sink(
+    stream: DataFrame,
+    sink: str,
+    shape: Callable[[DataFrame], DataFrame] = lambda b: b,
+) -> Callable[[DataFrame, int], None]:
+    """The write side of the drain contract: make ``sink``, record
+    ``shape(stream)``'s schema in ``sink/_schema.json`` (analysis only,
+    no Spark job; the file index skips ``_``-prefixed names) and return
+    the foreachBatch function that writes each micro-batch, through
+    ``shape``, to ``sink/batch_id=<id>``. Overwrite mode, so a replayed
+    batch rewrites its own directory and never double-counts."""
+    os.makedirs(sink, exist_ok=True)
+    with open(os.path.join(sink, SCHEMA_FILE), "w") as f:
+        f.write(shape(stream).schema.json())
+
+    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
+        shape(batch_df).write.mode("overwrite").parquet(
+            os.path.join(sink, f"batch_id={batch_id}")
+        )
+
+    return sink_batch
+
+
 def start_batches(
     stream: DataFrame,
     work: str,
@@ -96,21 +134,11 @@ def start_batches(
     mode: str = "update",
     shape: Callable[[DataFrame], DataFrame] = lambda b: b,
 ):
-    """Start ``stream`` as an availableNow query whose foreachBatch
-    writes each micro-batch, through ``shape``, to
-    ``sink/batch_id=<id>`` — overwrite mode, so a replayed batch
-    rewrites its own directory and never double-counts — checkpointed
-    under ``work/ckpt``. Returns the ``shared_drain.drain`` start
-    contract (query, work dir, sink dir)."""
-    os.makedirs(sink, exist_ok=True)
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        shape(batch_df).write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
+    """Start ``stream`` as an availableNow query into ``batch_sink``,
+    checkpointed under ``work/ckpt``. Returns the
+    ``shared_drain.drain`` start contract (query, work dir, sink dir)."""
     q = (
-        stream.writeStream.foreachBatch(sink_batch)
+        stream.writeStream.foreachBatch(batch_sink(stream, sink, shape))
         .outputMode(mode)
         .option("checkpointLocation", os.path.join(work, "ckpt"))
         .trigger(availableNow=True)
@@ -119,54 +147,71 @@ def start_batches(
     return q, work, sink
 
 
-class ReplayOrder:
-    """Pins a time-ordered chunk replay to EXPLICIT mtimes instead of
-    filesystem timestamp resolution: the file stream source lists
-    files in modification-time order, and sequentially appended
-    chunks can TIE on filesystems with coarse (e.g. 1 s) mtime
-    granularity, replaying out of order and letting the watermark
-    evict state with partners unread. Call ``mark(dest)`` after each
-    chunk write: every new parquet part file gets the next strictly
-    increasing mtime (a fixed past base, so the assignment is also
-    deterministic across runs)."""
-
-    BASE = 946_684_800  # 2000-01-01T00:00:00Z; any fixed past instant
-
-    def __init__(self, dest: str | None = None) -> None:
-        """Seed ``_seen`` (and the mtime counter) from ``dest``'s
-        existing ``*.parquet`` files so a second ReplayOrder built
-        against a directory holding a prior generation's chunks does
-        NOT re-stamp them from BASE in lexical order and scramble the
-        earlier replay (ADVICE r5). Call sites pass the directory they
-        will mark into."""
-        import glob
-
-        self._seen: set[str] = set()
-        self._n = 0
-        if dest is not None:
-            self._seen = set(glob.glob(os.path.join(dest, "*.parquet")))
-            self._n = len(self._seen)
-
-    def mark(self, dest: str) -> None:
-        import glob
-
-        new = sorted(
-            set(glob.glob(os.path.join(dest, "*.parquet"))) - self._seen
-        )
-        for path in new:
-            self._n += 1
-            os.utime(path, (self.BASE + self._n, self.BASE + self._n))
-        self._seen.update(new)
+def read_emissions(spark: SparkSession, sink: str) -> DataFrame:
+    """The read side of the drain contract: every row a ``batch_sink``
+    wrote, with its ``batch_id``, read under the recorded schema. A
+    sink no micro-batch reached (availableNow can finish an empty
+    source without one foreachBatch call) reads as zero rows of the
+    same schema, not as a missing path."""
+    with open(os.path.join(sink, SCHEMA_FILE)) as f:
+        schema = T.StructType.fromJson(json.load(f))
+    return spark.read.schema(schema.add("batch_id", T.LongType())).parquet(
+        sink
+    )
 
 
-def _partial_files(partials_dir: str) -> list[str]:
-    """Parquet part files under batch_id=* — empty when the stream
-    completed without a single foreachBatch invocation (empty input
-    under availableNow), in which case there is nothing to read. Read
-    this list, not a ``batch_id=*`` glob (whose metadata probe fails)."""
-    import glob
+def last_emission(emissions: DataFrame, keys: list[str]) -> DataFrame:
+    """Update-mode last-writer-wins: per key, the row of the highest
+    batch_id (a key's last emission holds its complete aggregate).
+    One partial-aggregable ``max(struct(batch_id, ...))`` per key;
+    the result is the keys, then the emitted values, without
+    batch_id."""
+    values = [c for c in emissions.columns if c not in keys and c != "batch_id"]
+    last = emissions.groupBy(*keys).agg(
+        F.max(F.struct("batch_id", *values)).alias("_last")
+    )
+    return last.select(*keys, *(F.col(f"_last.{c}").alias(c) for c in values))
 
-    return glob.glob(os.path.join(partials_dir, "batch_id=*", "*.parquet"))
+
+def time_slices(df: DataFrame, order: Sequence[int]) -> list[DataFrame]:
+    """``df`` cut into ``len(order)`` equal ranges of ``ts`` (one
+    min/max action), returned as range filters in ``order``: range
+    ``k`` goes to position ``order.index(k)``. Empty when ``df`` is."""
+    lo, hi = df.agg(
+        F.unix_micros(F.min("ts")), F.unix_micros(F.max("ts"))
+    ).first()
+    if lo is None:
+        return []
+    n, span = len(order), hi - lo + 1
+    us = F.unix_micros(F.col("ts"))
+    return [
+        df.filter((us >= lo + span * k // n) & (us < lo + span * (k + 1) // n))
+        for k in order
+    ]
+
+
+def write_replay(dest: str, frames: Iterable[DataFrame]) -> str:
+    """Write a replay fixture into the new, empty ``dest``: each frame
+    in order as one coalesced parquet append, each new part file
+    stamped with the next strictly increasing mtime from a fixed past
+    base. The file source lists files in modification-time order, so
+    it replays the frames in the order given; explicit mtimes keep
+    sequential writes from tying on filesystems with coarse (e.g.
+    1 s) timestamps and replaying out of order, and make the
+    assignment deterministic across runs. Returns ``dest``."""
+    if os.path.isdir(dest) and os.listdir(dest):
+        raise FileExistsError(f"replay fixture dir is not empty: {dest}")
+    os.makedirs(dest, exist_ok=True)
+    stamped: set[str] = set()
+    for df in frames:
+        df.coalesce(1).write.mode("append").parquet(dest)
+        for path in sorted(
+            set(glob.glob(os.path.join(dest, "*.parquet"))) - stamped
+        ):
+            stamped.add(path)
+            mtime = REPLAY_BASE_MTIME + len(stamped)
+            os.utime(path, (mtime, mtime))
+    return dest
 
 
 def streaming_wordcount(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -261,15 +306,11 @@ def streaming_wordcount_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .shared_drain import drain
 
     (partials_dir,) = drain(spark, sf_dir, _start_wc)
-    files = _partial_files(partials_dir)
-    if not files:
-        # Empty corpus: availableNow can finish without one
-        # foreachBatch call — honor the zero-row contract instead of
-        # raising path-not-found on the never-written partials.
-        shutil.rmtree(os.path.dirname(partials_dir), ignore_errors=True)
-        return spark.createDataFrame([], "word STRING, cnt BIGINT")
-    partials = spark.read.parquet(*files)
-    return partials.groupBy("word").agg(F.sum("cnt").alias("cnt"))
+    return (
+        read_emissions(spark, partials_dir)
+        .groupBy("word")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
 
 
 def run_to_completion(stream_df: DataFrame, query_name: str) -> DataFrame:
@@ -315,15 +356,10 @@ def streaming_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .shared_drain import drain_event_streams
 
     partials_dir = drain_event_streams(spark, sf_dir)["dedup"]
-    files = _partial_files(partials_dir)
-    if not files:
-        # Empty events table: no micro-batch ever fired — honor the
-        # zero-row contract (commit f0e3754) instead of raising on
-        # the never-written partials dir.
-        return spark.createDataFrame([], "event_type STRING, n_events BIGINT")
-    partials = spark.read.parquet(*files)
-    return partials.groupBy("event_type").agg(
-        F.sum("n").cast("long").alias("n_events")
+    return (
+        read_emissions(spark, partials_dir)
+        .groupBy("event_type")
+        .agg(F.sum("n").cast("long").alias("n_events"))
     )
 
 

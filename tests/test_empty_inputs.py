@@ -51,6 +51,13 @@ CASES = [
     # zero-doc corpus)
     "roc_auc_by_lang",
     "rrf_rank_fusion",
+    # one streaming entry per drain read-back form over a sink no
+    # micro-batch reached: summed partials, last emission, sentinel
+    # filter, and a full join onto the reference histogram
+    "streaming_wordcount",
+    "streaming_events_hourly",
+    "streaming_session_windows",
+    "streaming_psi_monitor",
 ]
 
 

@@ -464,12 +464,11 @@ def test_pq_python_model(spark):
 
 
 def test_embeddings_vec_id_unique(spark):
-    """The r13 least-fold _assign emits one assignment per input ROW
-    (the pre-r13 ROW_NUMBER collapsed duplicate vec_ids; the DuckDB
-    oracle still does) — so the engines agree only while vec_id is
-    unique in the embeddings fixture. Pin that invariant here: if a
-    future vintage ships duplicate vec_ids, this fails before the
-    oracle hash does, pointing at the real cause."""
+    """k-means assigns per input ROW on both engines (test below), but
+    other embedding oracles still key on vec_id (the PQ codebook's
+    per-(sub, vec_id) argmin). Pin the fixture invariant: if a future
+    vintage ships duplicate vec_ids, this fails before an oracle hash
+    does, pointing at the real cause."""
     from mapreduceece563_spark.sources.catalog import load_table
 
     dup = (
@@ -480,6 +479,41 @@ def test_embeddings_vec_id_unique(spark):
         .count()
     )
     assert dup == 0, "embeddings.vec_id must be unique (see _assign)"
+
+
+def test_kmeans_duplicate_vec_ids_match_oracle(spark, tmp_path):
+    """kmeans_2iter over tables whose embeddings repeat a quarter of
+    their rows (centroid seeds included): the engine assigns and
+    counts each row, so the oracle must pick a centroid per row, not
+    per vec_id."""
+    import shutil
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from mapreduceece563_spark import registry
+    from mapreduceece563_spark.operators import clustering as cl
+    from mapreduceece563_spark.sources.catalog import TABLES
+
+    for t in TABLES:
+        shutil.copy(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
+    emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    again = emb.filter(pc.equal(pc.bit_wise_and(emb["vec_id"], 3), 0))
+    assert pc.any(pc.less(again["vec_id"], cl.K)).as_py()
+    pq.write_table(pa.concat_tables([emb, again]), tmp_path / "embeddings.parquet")
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet'"
+        )
+    assert_frames_match(
+        registry.queries()["kmeans_2iter"](spark, str(tmp_path)),
+        con.execute(registry.oracle_sql()["kmeans_2iter"]),
+        ctx="kmeans_2iter:duplicate vec_ids",
+    )
 
 
 def test_pq_codebooks_are_broadcast(spark):

@@ -277,29 +277,25 @@ def test_late_rule_pinned(spark, tmp_path):
 
     from pyspark.sql import Window
 
-    from mapreduceece563_spark.streaming.wordcount_stream import ReplayOrder
+    from mapreduceece563_spark.streaming.wordcount_stream import write_replay
 
     src = str(tmp_path / "src")
     sink = str(tmp_path / "sink")
-    os.makedirs(src)
     os.makedirs(sink)
-    order = ReplayOrder(src)
     batches = [
         ["2024-01-05 10:30:00"],
         ["2024-01-05 23:30:00"],
         ["2024-01-05 07:50:00", "2024-01-05 08:10:00", "2024-01-05 08:40:00"],
     ]
-    for rows in batches:
-        (
+    write_replay(
+        src,
+        [
             spark.createDataFrame(
                 [(t, "A") for t in rows], "ts STRING, event_type STRING"
-            )
-            .select(F.col("ts").cast("timestamp").alias("ts"), "event_type")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-        order.mark(src)
+            ).select(F.col("ts").cast("timestamp").alias("ts"), "event_type")
+            for rows in batches
+        ],
+    )
     stream = (
         spark.readStream.schema("ts TIMESTAMP, event_type STRING")
         .option("maxFilesPerTrigger", 1)

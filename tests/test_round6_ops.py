@@ -1,6 +1,6 @@
 """Round-6 operator semantics that the registry-wide oracle compare
-cannot see: foreachBatch MERGE idempotency, ReplayOrder reseeding,
-and the IVF tuning curve's monotonicity."""
+cannot see: foreachBatch MERGE idempotency and the IVF tuning
+curve's monotonicity."""
 
 from __future__ import annotations
 
@@ -55,36 +55,6 @@ def test_upsert_merge_batch_is_idempotent(spark, tmp_path):
         for r in _read_target(spark, root).collect()
     }
     assert merged == {1: 4, 2: 2}
-
-
-def test_replay_order_reseeds_from_existing_files(tmp_path):
-    """A second ReplayOrder over a directory with prior-generation
-    chunks must continue the mtime sequence, never re-stamp them
-    (ADVICE r5)."""
-    from mapreduceece563_spark.streaming.wordcount_stream import ReplayOrder
-
-    dest = str(tmp_path)
-    first = ReplayOrder(dest)
-    for name in ("a.parquet", "b.parquet"):
-        open(os.path.join(dest, name), "w").write("x")
-        first.mark(dest)
-    before = {
-        n: os.stat(os.path.join(dest, n)).st_mtime
-        for n in ("a.parquet", "b.parquet")
-    }
-    assert before["a.parquet"] < before["b.parquet"]
-
-    second = ReplayOrder(dest)  # fresh instance, same directory
-    open(os.path.join(dest, "c.parquet"), "w").write("x")
-    second.mark(dest)
-    after = {
-        n: os.stat(os.path.join(dest, n)).st_mtime
-        for n in ("a.parquet", "b.parquet", "c.parquet")
-    }
-    # prior generation untouched, new chunk strictly later
-    assert after["a.parquet"] == before["a.parquet"]
-    assert after["b.parquet"] == before["b.parquet"]
-    assert after["c.parquet"] > after["b.parquet"]
 
 
 def test_ivf_recall_monotone_in_nprobe(spark):

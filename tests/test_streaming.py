@@ -4,19 +4,24 @@ watermarked window aggregation over events."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from mapreduceece563_spark.functions.text import tokenize_lines
 from mapreduceece563_spark.sources.catalog import load_table
 from mapreduceece563_spark.streaming.wordcount_stream import (
+    read_emissions,
     run_to_completion,
+    start_batches,
     streaming_wordcount,
     streaming_wordcount_batch,
     windowed_event_counts,
+    write_replay,
 )
 from tests.conftest import SF_DIR
 
@@ -327,3 +332,56 @@ def test_streaming_events_hourly_matches_batch(spark):
         for r in events_hourly(spark, SF_DIR).collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_write_replay_stamps_increasing_mtimes_in_order(spark, tmp_path):
+    """Each frame becomes one part file whose mtime is strictly later
+    than the previous frame's, in the order given (not lexical or
+    value order), so the file source replays the frames in order."""
+    dest = str(tmp_path / "replay")
+    order = [3, 1, 2]
+    write_replay(
+        dest, [spark.range(k, k + 1).withColumnRenamed("id", "k") for k in order]
+    )
+    files = sorted(
+        (os.stat(p).st_mtime, p)
+        for p in (os.path.join(dest, f) for f in os.listdir(dest))
+        if p.endswith(".parquet")
+    )
+    mtimes = [m for m, _ in files]
+    assert len(files) == 3 and mtimes == sorted(set(mtimes))
+    assert [pq.read_table(p)["k"].to_pylist() for _, p in files] == [
+        [k] for k in order
+    ]
+
+
+def test_write_replay_refuses_non_empty_dest(tmp_path):
+    """A fixture dir that already holds files would interleave a
+    second generation with the first's mtimes: refuse it."""
+    (tmp_path / "old.parquet").write_text("x")
+    with pytest.raises(FileExistsError):
+        write_replay(str(tmp_path), [])
+
+
+def test_read_emissions_on_never_written_sink(spark, tmp_path):
+    """An availableNow drain of an empty source fires no micro-batch;
+    its sink still reads back as zero rows of the shaped schema plus
+    batch_id."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    stream = spark.readStream.schema("word STRING").parquet(src)
+    q, _, sink = start_batches(
+        stream,
+        str(tmp_path),
+        str(tmp_path / "sink"),
+        mode="append",
+        shape=lambda b: b.groupBy("word").agg(F.count("*").alias("cnt")),
+    )
+    q.awaitTermination()
+    got = read_emissions(spark, sink)
+    assert got.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+        ("word", "string"),
+        ("cnt", "bigint"),
+        ("batch_id", "bigint"),
+    ]
