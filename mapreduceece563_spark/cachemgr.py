@@ -1,4 +1,5 @@
-"""The one memo layer: every cache and memo in the package lives here.
+"""The one memo and scratch layer: every cache, memo and written
+path in the package lives here.
 
 Spark's SQL cache registry (``CacheManager``) is PLAN-KEYED: ``df.cache()``
 registers the frame's canonicalized plan, and any later query — the
@@ -7,8 +8,10 @@ subtree — gets the materialized data substituted by
 ``lookupCachedData``. The registry grows per DISTINCT PLAN, not per
 call, so it is the accounting; nothing here keeps a second list.
 
-Two rules, and no cache, memo or module-level dict keyed by
-application anywhere else in the package:
+Three rules, and no cache, memo, module-level dict keyed by
+application or privately chosen temp dir anywhere else in the package
+(the one exception is ``session._SHIPPED``: the package zip is added
+to a SparkContext once, and a release must not re-zip it):
 
 - ``stage(df)`` for a per-call, multiply-referenced frame. Pass 2 of
   the bench re-caches the identical plan and hits pass 1's entry, and
@@ -23,16 +26,24 @@ application anywhere else in the package:
   frequencies), written layouts and replay fixtures (paths), drained
   streaming sinks (paths), and the catalog's per-table schema and
   narrowness verdicts. Never a registered entry's result.
+- ``scratch(spark, sf_dir, kind)`` for every directory the package
+  writes: the emptied, deterministic ``<tmp>/spark_graft/<app>_<sf
+  tag>/<kind>``, as the reference writes each intermediate to one
+  named scratch file per rank. A rebuild writes over its own previous
+  output instead of minting a new temp dir, so re-running a build is
+  idempotent and nothing leaks per pass. Because the call empties the
+  dir, each ``kind`` belongs to exactly one build.
 
 Three lifetimes, from longest to shortest:
 
 - **release**: ``release_session_caches()`` clears the SQL cache
   registry and the whole memo, paths included, so a cold measurement
-  is fully cold. It is for cold runs and test teardown only: a release
-  after the bench warmup was tried in r14 and reverted (bench.py
-  records why), because the warmup's sf0.001 entries never match a
-  timed build and the async uncache storm destabilized the first
-  timed passes.
+  is fully cold: the replay spills, the chunk corpus and every written
+  layout are rebuilt on the next call. It is for cold runs and test
+  teardown only: a release after the bench warmup was tried in r14 and
+  reverted (bench.py records why), because the warmup's sf0.001
+  entries never match a timed build and the async uncache storm
+  destabilized the first timed passes.
 - **forget**: ``forget(*builds)`` drops only those builds' entries.
   ``streaming.shared_drain.reset()`` forgets the drains, so the next
   request re-drains while the replay fixtures it reads stay written.
@@ -44,6 +55,10 @@ Three lifetimes, from longest to shortest:
 from __future__ import annotations
 
 import functools
+import os
+import re
+import shutil
+import tempfile
 import threading
 from typing import Any, Callable, TypeVar
 
@@ -107,6 +122,19 @@ def forget(*builds: Callable) -> None:
     with _LOCK:
         for key in [k for k in _MEMO if k[1] in targets]:
             del _MEMO[key]
+
+
+def scratch(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    """The emptied directory ``<tmp>/spark_graft/<app>_<sf tag>/<kind>``
+    where this application's ``kind`` artifact for ``sf_dir`` lives.
+    The same arguments always name the same dir; the call clears what
+    an earlier build left there."""
+    app = spark.sparkContext.applicationId
+    tag = re.sub(r"[^a-z0-9]+", "_", f"{app}_{sf_dir}".lower()).strip("_")
+    path = os.path.join(tempfile.gettempdir(), "spark_graft", tag, kind)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
 
 
 def release_session_caches() -> int:

@@ -78,11 +78,3 @@ def poly_hash_sql(expr: str) -> str:
         f"(acc, x) -> (acc * {HASH_BASE} + x) % {HASH_MOD}) "
         f"ELSE 0 END"
     )
-
-
-def minhash_sql_values() -> str:
-    """VALUES list (i, a, b) for the oracle's permutation table."""
-    rows = ", ".join(
-        f"({i}, {a}, {b})" for i, (a, b) in enumerate(MINHASH_PERMS)
-    )
-    return f"(VALUES {rows}) AS perms(i, a, b)"

@@ -517,16 +517,18 @@ def pq_codebook_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_assign_sql(src: str, cents: str, out: str) -> str:
+    """Nearest codeword per (subspace, row of ``src``); ``rid`` is the
+    per-row id, as in _assign_sql."""
     d = _SQDIST_SQL.format(a=f"{src}.v", b=f"{cents}.c")
     return f"""
 {out}_s AS (
-  SELECT {src}.sub, {src}.vec_id, {cents}.cid, {d} AS dist, {src}.v
+  SELECT {src}.sub, {src}.rid, {cents}.cid, {d} AS dist, {src}.v
   FROM {src} JOIN {cents} ON {src}.sub = {cents}.sub
 ),
 {out} AS (
-  SELECT sub, vec_id, cid, dist, v FROM (
-    SELECT sub, vec_id, cid, dist, v,
-           ROW_NUMBER() OVER (PARTITION BY sub, vec_id
+  SELECT sub, cid, dist, v FROM (
+    SELECT sub, cid, dist, v,
+           ROW_NUMBER() OVER (PARTITION BY sub, rid
                               ORDER BY dist, cid) AS rn
     FROM {out}_s
   ) WHERE rn = 1
@@ -534,12 +536,9 @@ def _pq_assign_sql(src: str, cents: str, out: str) -> str:
 
 
 PQ_CODEBOOK_SQL = f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
+WITH {_VECS_SQL},
 sv AS (
-  SELECT s.sub, vec_id,
+  SELECT s.sub, rid, vec_id,
          list_slice(v, s.sub * {PQ_SUBDIM} + 1,
                     (s.sub + 1) * {PQ_SUBDIM}) AS v
   FROM v, (SELECT unnest(range(0, {PQ_SUBS})) AS sub) s

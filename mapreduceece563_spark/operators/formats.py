@@ -34,33 +34,26 @@ hash, not just a row count:
   oracle extracts the same path with DuckDB's JSON functions.
 
 Every aggregate is int64 (counts / cents / extracted ints); the
-round-trip scratch writes are per-session temp dirs, never the
-read-only test data.
+round-trip writes go to per-session ``cachemgr.scratch`` dirs, never
+the read-only test data.
 """
 
 from __future__ import annotations
 
 import os
-import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cachemgr import per_session
+from ..cachemgr import per_session, scratch
 from ..sources.catalog import load_table
 from .relational import _cents, _cents_sql
-
-def _scratch(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    app = spark.sparkContext.applicationId
-    tag = re.sub(r"[^a-z0-9]+", "_", f"{app}_{sf_dir}".lower()).strip("_")
-    return os.path.join(tempfile.gettempdir(), "spark_graft_fmt", tag, kind)
 
 
 @per_session
 def _csv_dir(spark: SparkSession, sf_dir: str) -> str:
-    path = _scratch(spark, sf_dir, "csv")
+    path = scratch(spark, sf_dir, "csv")
     (
         load_table(spark, sf_dir, "part")
         .select("p_partkey", "p_name", "p_brand", "p_retailprice")
@@ -110,7 +103,7 @@ FROM part GROUP BY p_brand
 
 @per_session
 def _jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
-    path = _scratch(spark, sf_dir, "jsonl")
+    path = scratch(spark, sf_dir, "jsonl")
     (
         load_table(spark, sf_dir, "events")
         .select("event_id", "ts", "event_type", "value")
@@ -178,7 +171,7 @@ FROM events GROUP BY event_type
 
 @per_session
 def _evolved_dir(spark: SparkSession, sf_dir: str) -> str:
-    path = _scratch(spark, sf_dir, "evolve")
+    path = scratch(spark, sf_dir, "evolve")
     docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "n_chars")
     new = docs.filter(F.col("doc_id") % 2 == 1).select(
@@ -260,7 +253,7 @@ FROM parsed GROUP BY event_type
 
 @per_session
 def _orc_dir(spark: SparkSession, sf_dir: str) -> str:
-    path = _scratch(spark, sf_dir, "orc")
+    path = scratch(spark, sf_dir, "orc")
     (
         load_table(spark, sf_dir, "supplier")
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -312,7 +305,7 @@ def _binary_dir(spark: SparkSession, sf_dir: str) -> str:
     under doc_id=<k>/ dirs, once per (session, sf) — the on-disk shape
     of a raw multimodal landing zone (one object per asset) before
     compaction into parquet."""
-    path = _scratch(spark, sf_dir, "binfiles")
+    path = scratch(spark, sf_dir, "binfiles")
     (
         load_table(spark, sf_dir, "documents")
         # a NULL-text doc has no payload, hence no landing-zone
@@ -384,7 +377,7 @@ WHERE doc_id < {BINARYFILE_MAX_DOC} AND text IS NOT NULL
 
 @per_session
 def _xml_dir(spark: SparkSession, sf_dir: str) -> str:
-    path = _scratch(spark, sf_dir, "xml")
+    path = scratch(spark, sf_dir, "xml")
     (
         load_table(spark, sf_dir, "supplier")
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")

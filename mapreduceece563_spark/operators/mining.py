@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cachemgr import per_session, stage
+from ..cachemgr import per_session, scratch, stage
 from ..sources.catalog import load_table
 
 N_BINS = 20
@@ -954,10 +954,7 @@ def _ivm_base_view(spark: SparkSession, sf_dir: str) -> str:
     (application, sf_dir) — the stored view an incremental refresh
     maintains. Subsequent refreshes read THIS parquet, never the
     base fact rows."""
-    import os
-    import tempfile
-
-    path = os.path.join(tempfile.mkdtemp(prefix="ivm_view_"), "monthly")
+    path = scratch(spark, sf_dir, "ivm_monthly_view")
     base = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") < F.lit(IVM_CUTOFF).cast("timestamp"))

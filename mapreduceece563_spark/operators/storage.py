@@ -21,7 +21,7 @@ plan assertions:
   an event-type (or date) predicate reads 1/Nth of the lake.
 
 Both operators materialize their layout once per (session, sf) into
-a session-scoped temp location and cache the handle; re-invocations
+its ``cachemgr.scratch`` dir as a ``per_session`` build; re-invocations
 (bench passes, repeated driver checks) reuse the written layout, the
 same way a cluster deployment writes the bucketed/partitioned table
 once and amortizes it over every downstream query. The DuckDB
@@ -57,28 +57,15 @@ a user would reach for that API instead:
 from __future__ import annotations
 
 import os
-import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cachemgr import per_session
+from ..cachemgr import per_session, scratch
 from ..sources.catalog import load_table
 from .relational import _cents, _cents_sql
 
 N_BUCKETS = 8
-
-
-def _tag(spark: SparkSession, sf_dir: str) -> str:
-    app = spark.sparkContext.applicationId
-    return re.sub(r"[^a-z0-9]+", "_", f"{app}_{sf_dir}".lower()).strip("_")
-
-
-def _scratch(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    return os.path.join(
-        tempfile.gettempdir(), "spark_graft_layout", _tag(spark, sf_dir), kind
-    )
 
 
 @per_session
@@ -86,7 +73,10 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders + lineitem bucketed/sorted by the join key, once
     per (session, sf). Only the joined columns are written — column
     pruning at ingest, not just at read."""
-    tag = _tag(spark, sf_dir)
+    orders_dir = scratch(spark, sf_dir, "bucketed_orders")
+    lineitem_dir = scratch(spark, sf_dir, "bucketed_lineitem")
+    # table names are per (application, sf): the scratch dir's tag
+    tag = os.path.basename(os.path.dirname(orders_dir))
     bo, bl = f"b_orders_{tag}", f"b_lineitem_{tag}"
     (
         load_table(spark, sf_dir, "orders")
@@ -94,7 +84,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         .write.format("parquet")
         .bucketBy(N_BUCKETS, "o_orderkey")
         .sortBy("o_orderkey")
-        .option("path", _scratch(spark, sf_dir, "orders"))
+        .option("path", orders_dir)
         .mode("overwrite")
         .saveAsTable(bo)
     )
@@ -104,7 +94,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         .write.format("parquet")
         .bucketBy(N_BUCKETS, "l_orderkey")
         .sortBy("l_orderkey")
-        .option("path", _scratch(spark, sf_dir, "lineitem"))
+        .option("path", lineitem_dir)
         .mode("overwrite")
         .saveAsTable(bl)
     )
@@ -151,7 +141,7 @@ GROUP BY o.o_orderpriority
 @per_session
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """Write events partitioned by event_type, once per (session, sf)."""
-    path = _scratch(spark, sf_dir, "events_by_type")
+    path = scratch(spark, sf_dir, "events_by_type")
     (
         load_table(spark, sf_dir, "events")
         .select("ts", "value", "event_type")
@@ -602,8 +592,8 @@ def _merge_tables(
     it; re-invocations (bench passes, the time-travel entry) read the
     same versions a table format would serve from its manifest list.
     Returns (base_dir, final_dir, n_base_files, n_final_files)."""
-    base_dir = _scratch(spark, sf_dir, "merge_base")
-    final_dir = _scratch(spark, sf_dir, "merge_final")
+    base_dir = scratch(spark, sf_dir, "merge_base")
+    final_dir = scratch(spark, sf_dir, "merge_final")
     cutoff = F.lit(MERGE_CUTOFF).cast("timestamp")
 
     orders = _merge_orders(spark, sf_dir)
@@ -1076,7 +1066,7 @@ def _vacuum_manifest_dir(spark: SparkSession, sf_dir: str) -> str:
     # manifest keys are "<partition dir>/<file>" — basenames alone
     # collide across partition directories (one write task serves
     # several partition values and reuses its part-number prefix)
-    manifest_dir = _scratch(spark, sf_dir, "vacuum_manifest")
+    manifest_dir = scratch(spark, sf_dir, "vacuum_manifest")
     (
         spark.read.schema("k long, cents long, cbucket int")
         .parquet(final_dir)

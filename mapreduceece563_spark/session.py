@@ -17,6 +17,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# applicationIds whose SparkContext already has the package zip: the
+# one module-level set outside cachemgr, because addPyFile is once per
+# SparkContext and a cache release must not re-zip and re-add it.
 _SHIPPED: set[str] = set()
 
 

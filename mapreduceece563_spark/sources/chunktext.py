@@ -41,7 +41,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from ..cachemgr import per_session
+from ..cachemgr import per_session, scratch
 
 CHUNK_PREFIX = "chunk_"
 CHUNK_SUFFIX = ".txt"
@@ -216,40 +216,30 @@ class ChunkTextDataSource(DataSource):
         return ChunkTextReader(self.options)
 
 
-_REGISTERED: set[str] = set()
-
-
+@per_session
 def register_chunktext(spark) -> None:
-    """Idempotent per-session registration of the format. Python-source
-    filter pushdown is opt-in (off by default in Spark 4.1); a reader
-    that implements pushFilters REQUIRES the flag, so flip it with the
+    """Register the format once per application. Python-source filter
+    pushdown is opt-in (off by default in Spark 4.1); a reader that
+    implements pushFilters REQUIRES the flag, so flip it with the
     registration."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    app = spark.sparkContext.applicationId
-    if app in _REGISTERED:
-        return
     spark.dataSource.register(ChunkTextDataSource)
-    _REGISTERED.add(app)
 
 
 # --- deterministic chunk-corpus fixture -------------------------------
 
 N_CHUNKS = 8
-_CHUNK_CACHE: dict[str, str] = {}
 
 
-def chunked_corpus_dir(sf_dir: str) -> str:
-    """Write (once per process) the documents table as N_CHUNKS text
-    chunk files, doc assigned to chunk doc_id % N_CHUNKS, docs in
+@per_session
+def chunked_corpus_dir(spark, sf_dir: str) -> str:
+    """Write (once per application) the documents table as N_CHUNKS
+    text chunk files, doc assigned to chunk doc_id % N_CHUNKS, docs in
     doc_id order within a chunk — the reference's generate_files.py
     corpus layout, with a deterministic assignment both engines can
-    reproduce in SQL. Fixture prep (like spill_chunks), not part of
-    any timed query; pyarrow keeps it off the Spark driver."""
-    cached = _CHUNK_CACHE.get(sf_dir)
-    if cached and os.path.isdir(cached):
-        return cached
-    import tempfile
-
+    reproduce in SQL. Fixture prep (like the streaming replay spills),
+    not part of any timed query; pyarrow keeps it off the Spark
+    driver."""
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "documents.parquet")
@@ -269,7 +259,7 @@ def chunked_corpus_dir(sf_dir: str) -> str:
             break
         prev = ids[-1] if ids else prev
 
-    out = tempfile.mkdtemp(prefix="chunktext_")
+    out = scratch(spark, sf_dir, "chunktext_corpus")
     handles = [
         open(
             os.path.join(out, f"{CHUNK_PREFIX}{k}{CHUNK_SUFFIX}"),
@@ -302,7 +292,6 @@ def chunked_corpus_dir(sf_dir: str) -> str:
     finally:
         for h in handles:
             h.close()
-    _CHUNK_CACHE[sf_dir] = out
     return out
 
 
@@ -324,7 +313,7 @@ def wordcount_via_datasource(spark, sf_dir: str):
     from ..functions.text import tokenize_lines
 
     register_chunktext(spark)
-    src = chunked_corpus_dir(sf_dir)
+    src = chunked_corpus_dir(spark, sf_dir)
     lines = (
         spark.read.format("chunktext")
         .option("path", src)
@@ -346,7 +335,7 @@ def chunktext_pruned_count(spark, sf_dir: str):
     from ..functions.text import normalized_words_array
 
     register_chunktext(spark)
-    src = chunked_corpus_dir(sf_dir)
+    src = chunked_corpus_dir(spark, sf_dir)
     df = (
         spark.read.format("chunktext")
         .option("path", src)
@@ -481,17 +470,10 @@ def wordcount_sink_roundtrip(spark, sf_dir: str):
     embedded newlines — see chunked_corpus_dir). The round-13
     unicode vintage caught the parquet-sourced variant writing torn
     lines for newline-bearing tokens."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     register_chunktext(spark)
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "chunktext_sink",
-        spark.sparkContext.applicationId,
-        os.path.basename(sf_dir.rstrip("/")),
-    )
+    out = scratch(spark, sf_dir, "chunktext_sink")
     counts = wordcount_via_datasource(spark, sf_dir)
     (
         counts.write.format("chunktext")
@@ -694,10 +676,10 @@ def _start_stream_wc(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from ..functions.text import tokenize_lines
-    from ..streaming.wordcount_stream import _fresh_workdir, batch_sink
+    from ..streaming.wordcount_stream import batch_sink
 
-    src = chunked_corpus_dir(sf_dir)
-    work = _fresh_workdir("chunktext_stream", sf_dir)
+    src = chunked_corpus_dir(spark, sf_dir)
+    work = scratch(spark, sf_dir, "chunktext_stream")
     sink = os.path.join(work, "partials")
     lines = (
         spark.readStream.format("chunktext")
@@ -764,7 +746,7 @@ def wordcount_via_datasource_packed(spark, sf_dir: str):
     from ..functions.text import tokenize_lines
 
     register_chunktext(spark)
-    src = chunked_corpus_dir(sf_dir)
+    src = chunked_corpus_dir(spark, sf_dir)
     lines = (
         spark.read.format("chunktext")
         .option("path", src)

@@ -32,10 +32,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cachemgr import scratch
 from ..operators.relational import _cents
 from ..sources.catalog import load_table
 from .wordcount_stream import (
-    _fresh_workdir,
     event_chunks,
     last_emission,
     read_emissions,
@@ -47,7 +47,7 @@ def _start_enrich(spark: SparkSession, sf_dir: str):
     """Start the enrichment query over the shared events chunk layout
     (the shared_drain.drain start contract; the round-7 pool starts
     it together with its siblings)."""
-    work = _fresh_workdir("enrich", sf_dir)
+    work = scratch(spark, sf_dir, "enrich")
     dim = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )

@@ -21,7 +21,7 @@ range first (the session-window harness's layout), so the two sides
 advance through event time together and the query watermark — the
 min across sources, lagging the newest data by 1 hour > the 30-min
 join window — can never pass a row whose partner has not arrived.
-A hash-partitioned replay (spill_chunks) would NOT be safe: the
+A round-robin spill replay (event_chunks) would NOT be safe: the
 watermark would jump to max-ts after the first batch and evict
 state with partners still unread. That distinction — replay order
 as a correctness precondition for watermarked joins — is exactly
@@ -40,10 +40,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cachemgr import per_session
+from ..cachemgr import per_session, scratch
 from ..sources.catalog import load_table
 from .wordcount_stream import (
-    _fresh_workdir,
     read_emissions,
     start_batches,
     time_slices,
@@ -89,7 +88,7 @@ def _join_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     reset() keeps it, so a bench pass re-times the drain, not the
     chunk writes."""
     return _purchase_view_chunks(
-        spark, sf_dir, _fresh_workdir("stream_join_src", sf_dir)
+        spark, sf_dir, scratch(spark, sf_dir, "stream_join_src")
     )
 
 
@@ -129,7 +128,7 @@ def _start_join(spark: SparkSession, sf_dir: str):
     """The inner interval join over the time-ordered replay (the
     shared_drain.drain start contract; the round-7 pool starts it
     with its siblings)."""
-    work = _fresh_workdir("stream_join", sf_dir)
+    work = scratch(spark, sf_dir, "stream_join")
     joined = _interval_join(spark, *_join_src(spark, sf_dir), "inner")
     return start_batches(
         joined, work, os.path.join(work, "pairs"), mode="append"

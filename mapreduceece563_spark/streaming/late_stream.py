@@ -41,10 +41,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cachemgr import per_session
+from ..cachemgr import per_session, scratch
 from ..sources.catalog import load_table
 from .wordcount_stream import (
-    _fresh_workdir,
     last_emission,
     read_emissions,
     start_batches,
@@ -67,7 +66,7 @@ def _late_src(spark: SparkSession, sf_dir: str) -> str:
     index(LATE_PERM, k)). Input data, kept across reset()."""
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
     return write_replay(
-        os.path.join(_fresh_workdir("late_audit_src", sf_dir), "src"),
+        scratch(spark, sf_dir, "late_audit_src"),
         time_slices(ev, LATE_PERM),
     )
 
@@ -75,7 +74,7 @@ def _late_src(spark: SparkSession, sf_dir: str) -> str:
 def _start_late(spark: SparkSession, sf_dir: str):
     """The watermarked hourly count over the out-of-order replay (the
     shared_drain.drain start contract)."""
-    work = _fresh_workdir("late_audit", sf_dir)
+    work = scratch(spark, sf_dir, "late_audit")
     stream = (
         spark.readStream.schema("ts TIMESTAMP, event_type STRING")
         .option("maxFilesPerTrigger", 1)

@@ -36,9 +36,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cachemgr import per_session
+from ..cachemgr import per_session, scratch
 from .join_stream import JOIN_WINDOW_MIN, _interval_join, _purchase_view_chunks
-from .wordcount_stream import _fresh_workdir, read_emissions, start_batches
+from .wordcount_stream import read_emissions, start_batches
 
 OUTER_SENTINELS = ("2030-01-01 00:00:00", "2030-01-02 00:00:00")
 
@@ -54,14 +54,14 @@ def _outer_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         for ts in OUTER_SENTINELS
     ]
     return _purchase_view_chunks(
-        spark, sf_dir, _fresh_workdir("stream_outer_src", sf_dir), sentinels
+        spark, sf_dir, scratch(spark, sf_dir, "stream_outer_src"), sentinels
     )
 
 
 def _start_outer_join(spark: SparkSession, sf_dir: str):
     """The LEFT OUTER interval join (the shared_drain.drain start
     contract; the round-7 pool starts it with its siblings)."""
-    work = _fresh_workdir("stream_outer_join", sf_dir)
+    work = scratch(spark, sf_dir, "stream_outer_join")
     joined = _interval_join(spark, *_outer_src(spark, sf_dir), "left_outer")
     return start_batches(
         joined, work, os.path.join(work, "rows"), mode="append"

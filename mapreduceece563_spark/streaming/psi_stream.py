@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cachemgr import scratch
 from ..operators.analytics import (
     KS_SPLIT,
     PSI_BIN_CENTS,
@@ -41,7 +42,6 @@ from ..operators.analytics import (
 )
 from ..sources.catalog import load_table
 from .wordcount_stream import (
-    _fresh_workdir,
     event_chunks,
     last_emission,
     read_emissions,
@@ -62,7 +62,7 @@ def _start_psi(spark: SparkSession, sf_dir: str):
     """The current epoch (ts >= KS_SPLIT) streams off the shared events
     chunk layout; binned counts aggregate in update mode and sink per
     batch_id. The shared_drain.drain start contract."""
-    work = _fresh_workdir("psi_monitor", sf_dir)
+    work = scratch(spark, sf_dir, "psi_monitor")
     stream = (
         spark.readStream.schema(
             "ts TIMESTAMP, event_type STRING, value DOUBLE"

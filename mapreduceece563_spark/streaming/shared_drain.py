@@ -45,9 +45,8 @@ import threading
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..cachemgr import forget, per_session
+from ..cachemgr import forget, per_session, scratch
 from ..operators.relational import _cents
-from ..sources.catalog import load_table
 from ..sources.chunktext import _stream_wc_drain
 from . import (
     enrich_stream,
@@ -59,7 +58,7 @@ from . import (
 from .late_stream import _late_drain
 from .stateful import _tws_drain, running_user_profile
 from .upsert_stream import _upsert_drain
-from .wordcount_stream import _fresh_workdir, event_chunks, spill_chunks, start_batches
+from .wordcount_stream import doubled_event_chunks, event_chunks, start_batches
 
 _PARTS = "spark.sql.shuffle.partitions"
 _PIN_LOCK = threading.Lock()
@@ -105,7 +104,7 @@ def drain(spark: SparkSession, sf_dir: str, *starts) -> list:
 def _start_profile(spark: SparkSession, sf_dir: str):
     """Custom stateful per-user profile (applyInPandasWithState),
     update-mode emissions tagged by batch_id."""
-    work = _fresh_workdir("events_profile", sf_dir)
+    work = scratch(spark, sf_dir, "events_profile")
     stream = (
         spark.readStream.schema("user_id BIGINT, value DOUBLE")
         .option("maxFilesPerTrigger", 2)
@@ -118,7 +117,7 @@ def _start_profile(spark: SparkSession, sf_dir: str):
 
 def _start_hourly(spark: SparkSession, sf_dir: str):
     """Update-mode hourly windowed aggregation."""
-    work = _fresh_workdir("events_hourly", sf_dir)
+    work = scratch(spark, sf_dir, "events_hourly")
     stream = (
         spark.readStream.schema(
             "ts TIMESTAMP, event_type STRING, value DOUBLE"
@@ -144,16 +143,13 @@ def _start_hourly(spark: SparkSession, sf_dir: str):
 
 def _start_dedup(spark: SparkSession, sf_dir: str):
     """Watermarked exact dedup of the deliberately doubled stream."""
-    work = _fresh_workdir("events_dedup", sf_dir)
-    dd = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type"
-    )
+    work = scratch(spark, sf_dir, "events_dedup")
     stream = (
         spark.readStream.schema(
             "event_id BIGINT, ts TIMESTAMP, event_type STRING"
         )
         .option("maxFilesPerTrigger", 2)
-        .parquet(spill_chunks(dd.union(dd), sf_dir, "ev_doubled"))
+        .parquet(doubled_event_chunks(spark, sf_dir))
     )
     deduped = stream.withWatermark(
         "ts", "3650 days"

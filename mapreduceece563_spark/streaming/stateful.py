@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..cachemgr import per_session
+from ..cachemgr import per_session, scratch
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -164,14 +164,10 @@ _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 def _start_tws(spark, sf_dir: str):
     """The transformWithStateInPandas query (the shared_drain.drain
     start contract)."""
-    from ..sources.catalog import load_table
     from .tws_processor import TwsUserProfile
-    from .wordcount_stream import _fresh_workdir, spill_chunks, start_batches
+    from .wordcount_stream import event_chunks, start_batches
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", "value"
-    )
-    work = _fresh_workdir("tws_profile", sf_dir)
+    work = scratch(spark, sf_dir, "tws_profile")
     stream = (
         spark.readStream.schema(
             "user_id BIGINT, event_type STRING, value DOUBLE"
@@ -185,7 +181,7 @@ def _start_tws(spark, sf_dir: str):
         # partitions stay at 8: halving them SLOWED the drain
         # (per-key Python state work loses parallelism).
         .option("maxFilesPerTrigger", 4)
-        .parquet(spill_chunks(ev, sf_dir, "tws_events"))
+        .parquet(event_chunks(spark, sf_dir))
     )
     out = stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=TwsUserProfile(),

@@ -35,9 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cachemgr import per_session
-from ..sources.catalog import load_table
-from .wordcount_stream import _fresh_workdir, spill_chunks
+from ..cachemgr import per_session, scratch
+from .wordcount_stream import event_chunks
 
 TARGET_SCHEMA = (
     "user_id BIGINT, n_events BIGINT, value_cents BIGINT,"
@@ -128,11 +127,7 @@ def _merge_batch(
 def _start_upsert(spark: SparkSession, sf_dir: str):
     """The MERGE drain (the shared_drain.drain start contract): the
     sink is the target table root, not a batch_id-keyed dir."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type", "value"
-    )
-    src = spill_chunks(ev, sf_dir, "upsert_events")
-    work = _fresh_workdir("merge_upsert", sf_dir)
+    work = scratch(spark, sf_dir, "merge_upsert")
     root = os.path.join(work, "target")
     os.makedirs(root, exist_ok=True)
     stream = (
@@ -141,7 +136,7 @@ def _start_upsert(spark: SparkSession, sf_dir: str):
             " value DOUBLE"
         )
         .option("maxFilesPerTrigger", 2)
-        .parquet(src)
+        .parquet(event_chunks(spark, sf_dir))
     )
     q = (
         stream.writeStream.foreachBatch(

@@ -39,10 +39,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cachemgr import per_session
+from ..cachemgr import per_session, scratch
 from ..sources.catalog import load_table
 from .wordcount_stream import (
-    _fresh_workdir,
     event_chunks,
     last_emission,
     read_emissions,
@@ -105,13 +104,13 @@ def _session_src(spark: SparkSession, sf_dir: str) -> str:
         for ts in SESSION_SENTINELS
     ]
     return write_replay(
-        os.path.join(_fresh_workdir("session_win_src", sf_dir), "src"),
+        scratch(spark, sf_dir, "session_win_src"),
         time_slices(ev, range(N_SESSION_CHUNKS)) + sentinels,
     )
 
 
 def _start_session_windows(spark: SparkSession, sf_dir: str):
-    work = _fresh_workdir("session_win", sf_dir)
+    work = scratch(spark, sf_dir, "session_win")
     stream = (
         spark.readStream.schema("user_id BIGINT, ts TIMESTAMP")
         .option("maxFilesPerTrigger", 1)
@@ -178,7 +177,7 @@ SLIDE_US = 7200 * 1_000_000  # 2 hours in microseconds
 def _start_sliding(spark: SparkSession, sf_dir: str):
     """The sliding-window query over the shared events chunk layout
     (the shared_drain.drain start contract)."""
-    work = _fresh_workdir("sliding_win", sf_dir)
+    work = scratch(spark, sf_dir, "sliding_win")
     stream = (
         spark.readStream.schema(
             "ts TIMESTAMP, event_type STRING, value DOUBLE"

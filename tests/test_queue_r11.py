@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR, assert_frames_match
@@ -464,11 +465,12 @@ def test_pq_python_model(spark):
 
 
 def test_embeddings_vec_id_unique(spark):
-    """k-means assigns per input ROW on both engines (test below), but
-    other embedding oracles still key on vec_id (the PQ codebook's
-    per-(sub, vec_id) argmin). Pin the fixture invariant: if a future
-    vintage ships duplicate vec_ids, this fails before an oracle hash
-    does, pointing at the real cause."""
+    """The k-means and PQ oracles assign per input ROW on both engines
+    (test below), so duplicated rows no longer split them; the fixture
+    still ships vec_id as a unique key, and entries that report pairs
+    or neighbours by vec_id take it as one. Pin the fixture invariant:
+    if a future vintage ships duplicate vec_ids, this fails before an
+    oracle hash does, pointing at the real cause."""
     from mapreduceece563_spark.sources.catalog import load_table
 
     dup = (
@@ -481,11 +483,12 @@ def test_embeddings_vec_id_unique(spark):
     assert dup == 0, "embeddings.vec_id must be unique (see _assign)"
 
 
-def test_kmeans_duplicate_vec_ids_match_oracle(spark, tmp_path):
-    """kmeans_2iter over tables whose embeddings repeat a quarter of
-    their rows (centroid seeds included): the engine assigns and
-    counts each row, so the oracle must pick a centroid per row, not
-    per vec_id."""
+@pytest.mark.parametrize("entry", ["kmeans_2iter", "pq_codebook_stats"])
+def test_kmeans_duplicate_vec_ids_match_oracle(spark, tmp_path, entry):
+    """k-means and PQ codebook training over tables whose embeddings
+    repeat a quarter of their rows (centroid seeds included): the
+    engine assigns and counts each row, so the oracle must pick a
+    centroid per row (per subspace for PQ), not per vec_id."""
     import shutil
 
     import duckdb
@@ -510,9 +513,9 @@ def test_kmeans_duplicate_vec_ids_match_oracle(spark, tmp_path):
             f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet'"
         )
     assert_frames_match(
-        registry.queries()["kmeans_2iter"](spark, str(tmp_path)),
-        con.execute(registry.oracle_sql()["kmeans_2iter"]),
-        ctx="kmeans_2iter:duplicate vec_ids",
+        registry.queries()[entry](spark, str(tmp_path)),
+        con.execute(registry.oracle_sql()[entry]),
+        ctx=f"{entry}:duplicate vec_ids",
     )
 
 

@@ -20,16 +20,16 @@ from mapreduceece563_spark.sources.chunktext import (
 from tests.conftest import SF_DIR
 
 
-def test_one_partition_per_chunk_file():
-    src = chunked_corpus_dir(SF_DIR)
+def test_one_partition_per_chunk_file(spark):
+    src = chunked_corpus_dir(spark, SF_DIR)
     reader = ChunkTextReader({"path": src})
     parts = reader.partitions()
     assert len(parts) == N_CHUNKS
     assert sorted(p.chunk_id for p in parts) == list(range(N_CHUNKS))
 
 
-def test_pushdown_prunes_partitions():
-    src = chunked_corpus_dir(SF_DIR)
+def test_pushdown_prunes_partitions(spark):
+    src = chunked_corpus_dir(spark, SF_DIR)
     reader = ChunkTextReader({"path": src})
     remaining = reader.pushFilters([EqualTo(("chunk_id",), PRUNED_CHUNK)])
     assert list(remaining) == []  # fully absorbed
@@ -37,8 +37,8 @@ def test_pushdown_prunes_partitions():
     assert [p.chunk_id for p in parts] == [PRUNED_CHUNK]
 
 
-def test_pushdown_in_filter_and_foreign_filter_kept():
-    src = chunked_corpus_dir(SF_DIR)
+def test_pushdown_in_filter_and_foreign_filter_kept(spark):
+    src = chunked_corpus_dir(spark, SF_DIR)
     reader = ChunkTextReader({"path": src})
     foreign = EqualTo(("text",), "x")
     remaining = reader.pushFilters(
@@ -50,7 +50,7 @@ def test_pushdown_in_filter_and_foreign_filter_kept():
 
 def test_reader_round_trips_every_line(spark):
     register_chunktext(spark)
-    src = chunked_corpus_dir(SF_DIR)
+    src = chunked_corpus_dir(spark, SF_DIR)
     df = spark.read.format("chunktext").option("path", src).load()
     n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
     assert df.count() == n_docs
@@ -92,13 +92,13 @@ def test_writer_commit_protocol_leaves_no_temps(spark, tmp_path):
     got = sorted(r["text"] for r in back.collect())
     assert got == ["alpha 2", "beta 3", "gamma 1"]
 
-def test_reader_yields_arrow_batches():
+def test_reader_yields_arrow_batches(spark):
     """The batch read path must hand Spark pyarrow RecordBatches, not
     per-row tuples — the Arrow-columnar contract that keeps the
     custom-source ingest off the per-line Python/pickle path."""
     import pyarrow as pa
 
-    src = chunked_corpus_dir(SF_DIR)
+    src = chunked_corpus_dir(spark, SF_DIR)
     reader = ChunkTextReader({"path": src})
     part = reader.partitions()[0]
     batches = list(reader.read(part))
@@ -170,7 +170,7 @@ def test_overwrite_stages_deletion_until_commit(spark, tmp_path):
         assert fh.read() == "solo 7\n"
 
 
-def test_stream_reader_offset_and_partition_planning():
+def test_stream_reader_offset_and_partition_planning(spark):
     """Distributed micro-batch reader: latestOffset is a PURE function
     of the chunk directory (the full frontier — restart-correct by
     construction, see the class docstring); partitions(start, end) is
@@ -182,7 +182,7 @@ def test_stream_reader_offset_and_partition_planning():
         ChunkTextStreamReader,
     )
 
-    src = chunked_corpus_dir(SF_DIR)
+    src = chunked_corpus_dir(spark, SF_DIR)
     r = ChunkTextStreamReader({"path": src})
     assert r.initialOffset() == {"next": 0}
     assert r.latestOffset() == {"next": N_CHUNKS}
@@ -212,7 +212,7 @@ def test_stream_reader_mode_option_selects_simple_reader(spark):
         ChunkTextStreamReader,
     )
 
-    src = chunked_corpus_dir(SF_DIR)
+    src = chunked_corpus_dir(spark, SF_DIR)
     ds = ChunkTextDataSource({"path": src, "reader": "driver-prefetch"})
     with _pytest.raises(PySparkNotImplementedError):
         ds.streamReader(None)
@@ -221,7 +221,7 @@ def test_stream_reader_mode_option_selects_simple_reader(spark):
     assert isinstance(default_ds.streamReader(None), ChunkTextStreamReader)
 
 
-def test_simple_stream_reader_parity():
+def test_simple_stream_reader_parity(spark):
     """The SimpleDataSourceStreamReader variant (driver-side prefetch
     API) must agree with the distributed reader chunk for chunk."""
     from mapreduceece563_spark.sources.chunktext import (
@@ -229,7 +229,7 @@ def test_simple_stream_reader_parity():
         ChunkTextStreamReader,
     )
 
-    src = chunked_corpus_dir(SF_DIR)
+    src = chunked_corpus_dir(spark, SF_DIR)
     simple = ChunkTextSimpleStreamReader({"path": src})
     dist = ChunkTextStreamReader({"path": src})
     it, end = simple.read({"next": 0})
@@ -249,17 +249,14 @@ def test_simple_stream_reader_parity():
     assert got == rows
 
 
-def test_chunk_fixture_unsorted_vintage_fallback(tmp_path):
+def test_chunk_fixture_unsorted_vintage_fallback(spark, tmp_path):
     """chunked_corpus_dir streams sorted parquet batch-wise; an
     UNSORTED vintage must fall back to the sorted one-shot read and
     still produce the doc_id-ordered per-chunk layout."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from mapreduceece563_spark.sources.chunktext import (
-        _CHUNK_CACHE,
-        chunked_corpus_dir,
-    )
+    from mapreduceece563_spark.cachemgr import forget
 
     ids = [7, 2, 9, 0, 5, 1, 8, 3, 6, 4]
     pq.write_table(
@@ -271,7 +268,7 @@ def test_chunk_fixture_unsorted_vintage_fallback(tmp_path):
         ),
         str(tmp_path / "documents.parquet"),
     )
-    out = chunked_corpus_dir(str(tmp_path))
+    out = chunked_corpus_dir(spark, str(tmp_path))
     try:
         got = {}
         for name in sorted(os.listdir(out)):
@@ -283,7 +280,7 @@ def test_chunk_fixture_unsorted_vintage_fallback(tmp_path):
         assert got["chunk_7.txt"] == ["doc 7"]
         assert sum(len(v) for v in got.values()) == len(ids)
     finally:
-        _CHUNK_CACHE.pop(str(tmp_path), None)
+        forget(chunked_corpus_dir)
 
 
 def test_arrow_batching_splits_large_chunks(tmp_path):
@@ -317,7 +314,7 @@ def test_default_distributed_stream_reader_end_to_end(spark, tmp_path):
     from pyspark.sql import functions as F
 
     register_chunktext(spark)
-    src = chunked_corpus_dir(SF_DIR)
+    src = chunked_corpus_dir(spark, SF_DIR)
     sink = str(tmp_path / "out")
     q = (
         spark.readStream.format("chunktext")
@@ -414,7 +411,7 @@ def test_stream_reader_checkpoint_restart_no_duplicates(spark, tmp_path):
     ) == [0, 1, 2, 3, 4, 5]
 
 
-def test_packed_partitions_cover_all_chunks_once():
+def test_packed_partitions_cover_all_chunks_once(spark):
     """packBytes bin-packing (round 6): every chunk appears in exactly
     one bin, bins respect the size+open-cost cap, order is preserved,
     and packBytes=0 keeps the per-chunk default."""
@@ -425,7 +422,7 @@ def test_packed_partitions_cover_all_chunks_once():
         ChunkFilesPartition,
     )
 
-    src = chunked_corpus_dir(SF_DIR)
+    src = chunked_corpus_dir(spark, SF_DIR)
     pack = 256 * 1024
     reader = ChunkTextReader({"path": src, "packbytes": str(pack)})
     parts = reader.partitions()
@@ -445,7 +442,7 @@ def test_packed_partitions_cover_all_chunks_once():
 def test_packed_read_matches_per_chunk_read(spark):
     """The packed path must be byte-identical to the per-chunk path —
     same (chunk_id, line_no, text) multiset."""
-    src = chunked_corpus_dir(SF_DIR)
+    src = chunked_corpus_dir(spark, SF_DIR)
     base = (
         spark.read.format("chunktext").option("path", src).load()
     )
@@ -460,10 +457,10 @@ def test_packed_read_matches_per_chunk_read(spark):
     assert a == b
 
 
-def test_packed_read_composes_with_pushdown():
+def test_packed_read_composes_with_pushdown(spark):
     """chunk_id pruning applies BEFORE packing: a pruned packed scan
     plans bins over the single surviving file."""
-    src = chunked_corpus_dir(SF_DIR)
+    src = chunked_corpus_dir(spark, SF_DIR)
     reader = ChunkTextReader({"path": src, "packbytes": str(1 << 20)})
     reader.pushFilters([EqualTo(("chunk_id",), PRUNED_CHUNK)])
     parts = reader.partitions()
